@@ -13,8 +13,11 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: everything a run writes lives under here (ignored by git)
 WORK = os.path.join(ROOT, ".perfbench_work")
-#: one fixed local[N] for every workload; N <= nproc on a 4-core host
-CORES = 4
+#: one fixed local[N] for every workload. On a 4-core host, 2 leaves
+#: cores for the driver and the JVM's own threads. In interleaved pairs
+#: on such a host, compact_job ran faster at local[2] than at local[4]
+#: and fused_rollup about 10 % slower.
+CORES = 2
 DRIVER_MEMORY = "3g"
 #: no console progress bars in the benchmark's output
 QUIET = {"spark.ui.showConsoleProgress": "false"}
@@ -57,24 +60,39 @@ def pin_env(rdir: str) -> dict:
 
 
 def calm_probe_ms() -> float:
-    """One single-core reading: sorting 1e6 doubles (milliseconds)."""
+    """One single-core reading of host speed: the median of 5 sorts of
+    1e6 doubles after one untimed sort (milliseconds)."""
     import numpy as np
 
     x = np.random.default_rng(0).random(1_000_000)
-    t = time.perf_counter()
     np.sort(x)
-    return (time.perf_counter() - t) * 1000
+    times = []
+    for _ in range(5):
+        t = time.perf_counter()
+        np.sort(x)
+        times.append((time.perf_counter() - t) * 1000)
+    return median(times)
 
 
-def tree_files(path: str, hidden: bool = False) -> dict[str, tuple[int, int]]:
+def cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) CPU time of the host since boot, in jiffies, from
+    /proc/stat; (0, 0) where there is none."""
+    try:
+        with open("/proc/stat") as fh:
+            vals = [int(v) for v in fh.readline().split()[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    return (vals[7] if len(vals) > 7 else 0), sum(vals[:8])
+
+
+def tree_files(path: str) -> dict[str, tuple[int, int]]:
     """{file path: (size, mtime_ns)} under ``path``; dot/underscore
-    entries (staging dirs, _SUCCESS, .crc) are skipped unless ``hidden``."""
+    entries (staging dirs, _SUCCESS, .crc) are skipped."""
     out = {}
     for root, dirs, files in os.walk(path):
-        if not hidden:
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         for f in files:
-            if hidden or not f.startswith((".", "_")):
+            if not f.startswith((".", "_")):
                 p = os.path.join(root, f)
                 st = os.stat(p)
                 out[p] = (st.st_size, st.st_mtime_ns)

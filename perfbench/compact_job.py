@@ -24,16 +24,16 @@ import pyarrow.parquet as pq
 
 import inputs
 from common import CORES, DRIVER_MEMORY, QUIET, ROOT, WORK, median, tree_bytes, tree_files
+from tersets_spark.operators.rollup import TIERS
 
-N_DOCS = 1200
+N_DOCS = 800
 N_FILES = 2 * CORES
 RETENTION = 1024
 N_BUCKETS = 64
 BUCKETS_PER_BATCH = 16  # run_with_lineage's default
-TIERS = {"1m": 60, "1h": 3600, "1d": 86400}
 SAMPLE_DOCS = 32
 #: set-ups per run; setup_s is their median
-SETUPS = 3
+SETUPS = 5
 
 
 def spark_submit() -> str:
@@ -158,7 +158,7 @@ def check_outputs(checks, out: str, tokens_dir: str, n_tok: np.ndarray, seed: in
 def run(args, t0: float, checks, rdir: str, tracer_mode: bool):
     """``t0`` is unused: each submission starts its own JVM, so the set-up
     that precedes it (building the --py-files archive, importing the
-    job's modules in a fresh interpreter) is timed on its own, 3 times."""
+    job's modules in a fresh interpreter) is timed on its own, SETUPS times."""
     cache = os.path.join(WORK, "inputs")
     g = time.time()
     tokens_dir = inputs.token_table(cache, args.seed, N_DOCS, N_FILES)

@@ -5,7 +5,8 @@ repeated over one token table cached in memory.
 ``resume_s`` is the repetition that follows a loss of the cached table:
 the table is unpersisted and re-persisted, so that repetition re-reads
 the parquet source and refills the cache, as Spark recovers lost cached
-blocks by recomputing them from lineage.
+blocks by recomputing them from lineage. The two kinds of repetition
+alternate, so both medians sample the same stretch of host time.
 """
 
 from __future__ import annotations
@@ -18,13 +19,14 @@ import pyarrow.dataset as ds
 
 import inputs
 from common import CORES, QUIET, WORK, median, tree_bytes
+from tersets_spark.operators.rollup import TIERS
 
 N_DOCS = 2000
 N_FILES = 8 * CORES
-WARM_REPS = 6
-MIN_REPS = 5
-RESUME_REPS = 4
-WIDTHS = {"1m": (0, 60), "1h": (1, 3600), "1d": (3, 86400)}  # tier: (grouping id, width)
+WARM_REPS = 3
+MIN_REPS = 4  # of each kind
+#: flagship_summary's grouping id of each rollup tier
+GIDS = {"1m": 0, "1h": 1, "1d": 3}
 
 
 def repetition(toks) -> tuple[float, dict]:
@@ -40,7 +42,8 @@ def check_summary(checks, res: dict, n_tok: np.ndarray, tag: str) -> None:
     total = res.get(15, {})
     checks.check(f"fused.{tag}.all_ok", total.get("all_ok") == 1)
     checks.check(f"fused.{tag}.n_values", total.get("n_values") == int(n_tok.sum()))
-    for name, (gid, width) in WIDTHS.items():
+    for name, gid in GIDS.items():
+        width = TIERS[name]
         want = int(((n_tok + width - 1) // width).sum())
         got = res.get(gid, {}).get("rows")
         checks.check(f"fused.{tag}.tier_{name}_rows", got == want, f"{got} != {want}")
@@ -76,28 +79,27 @@ def run(args, t0: float, checks, rdir: str, tracer_mode: bool):
             repetition(toks)
         setup_s = time.time() - t0 - gen_s
 
-        walls, blob_bytes = [], set()
+        walls, resumes, windows, blob_bytes = [], [], [], set()
         m0 = time.time()
         while True:
+            s = time.time()
             wall, res = repetition(toks)
+            windows.append((s, time.time()))
             checks.op(True)
             check_summary(checks, res, n_tok, "rep")
             walls.append(wall)
             blob_bytes.add(res[15]["bytes"])
-            elapsed = time.time() - m0
-            if len(walls) >= MIN_REPS and elapsed + median(walls) > args.seconds:
-                break
-        ctx["reps"] = (m0, time.time(), len(walls))
-        checks.check("fused.blob_bytes_repeat", len(blob_bytes) == 1, str(sorted(blob_bytes)))
-
-        resumes = []
-        for _ in range(RESUME_REPS):
             toks.unpersist(blocking=True)
             toks = toks.persist()
             wall, res = repetition(toks)
             checks.op(True)
             check_summary(checks, res, n_tok, "resume")
             resumes.append(wall)
+            elapsed = time.time() - m0
+            if len(walls) >= MIN_REPS and elapsed + median(walls) + median(resumes) > args.seconds:
+                break
+        ctx["reps"] = windows
+        checks.check("fused.blob_bytes_repeat", len(blob_bytes) == 1, str(sorted(blob_bytes)))
         if tracer_mode:
             import layers
 

@@ -18,31 +18,12 @@ import numpy as np
 import pyarrow.dataset as ds
 
 import spans as tr
-from common import CORES, median, p75
+from common import CORES, ROOT, median, p75
+from compact_job import RETENTION
 
-UNITS = {
-    "kernels.delta_encode_mtok_s": "Mtok/s", "kernels.delta_decode_mtok_s": "Mtok/s",
-    "kernels.chimp64_encode_mtok_s": "Mtok/s", "kernels.chimp64_decode_mtok_s": "Mtok/s",
-    "arrow.map_in_arrow_s": "s", "arrow.map_in_pandas_s": "s",
-    "pipeline.fused_s": "s", "pipeline.summary_s": "s", "pipeline.exchange_s": "s",
-    "pipeline.shuffle_bytes": "bytes",
-    "rollup.base_s": "s", "rollup.tiers_s": "s", "rollup.input_scans": "count",
-    "retention.aged_token_share": "ratio", "retention.raw_hot_s": "s", "compress.blocks_s": "s",
-    "lineage.run_s": "s", "lineage.blocks_write_s": "s", "lineage.bookkeeping_s": "s",
-    "lineage.spark_jobs": "count", "lineage.buckets_replayed": "count",
-    "io.write_s": "s", "io.bytes_written": "bytes", "io.files_written": "count",
-    "spark.jobs": "count", "spark.task_busy_s": "s", "spark.task_cpu_s": "s", "spark.gc_s": "s",
-    "spark.spill_bytes": "bytes", "spark.no_task_s": "s", "spark.core_busy_share": "ratio",
-    "dedup.lsh_candidates_s": "s", "dedup.verify_s": "s", "dedup.cc_s": "s",
-    "dedup.candidate_pairs": "count", "dedup.verified_share": "ratio",
-    "stream.docs_per_s": "docs/s", "stream.batch_p50_s": "s", "stream.batch_p75_s": "s",
-    "stream.batch_write_s": "s", "stream.batch_spark_jobs": "count", "stream.store_bytes": "bytes",
-    "stream.dup_of_earlier": "count", "stream.recompact_s": "s", "stream.recompact_incr_s": "s",
-    "stream.recompact_bytes_rewritten": "bytes", "stream.recompact_incr_bytes_rewritten": "bytes",
-    "stream.recompact_incr_files_rewritten": "count", "stream.recompact_incr_candidate_pairs": "count",
-    "driver.collect_s": "s",
-}
-RETENTION = 1024
+#: per-layer metric name -> unit, as BENCHMARK.json declares them
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _fh:
+    UNITS = {m["name"]: m["unit"] for m in json.load(_fh)["per_layer"]}
 STREAM_BATCHES = 4  # micro-batches of the traced fuzzy_stream flow
 
 
@@ -88,7 +69,7 @@ def compact_layers(ctx: dict) -> dict:
         "io.files_written": sum(p.endswith(".parquet") for p in files),
         "driver.collect_s": tr.total_s(tr.top_level(spans, "collect") + tr.top_level(spans, "count")),
     }
-    out.update(tr.engine_metrics(log, main["start"], main["end"], CORES))
+    out.update(tr.engine_metrics(log, [(main["start"], main["end"])], CORES))
     return out
 
 
@@ -160,7 +141,7 @@ def fused_probes(spark, toks, args, checks, rdir: str, ctx: dict) -> dict:
     from tersets_spark.operators.retention import split_aged
     from tersets_spark.operators.rollup import rollup_tokens_base
 
-    m0, m1, n_reps = ctx["reps"]
+    windows = ctx["reps"]
     log_dir = os.path.join(rdir, "ev")
     out = {"retention.aged_token_share": aged_share(ctx["n_tok"])}
     out.update(kernel_probe(ctx["tokens_dir"]))
@@ -185,8 +166,8 @@ def fused_probes(spark, toks, args, checks, rdir: str, ctx: dict) -> dict:
     spark.stop()  # flushes the event log
     log = tr.read_eventlog(log_dir)
     out["pipeline.shuffle_bytes"] = tr.shuffle_bytes(log, s0, s1)
-    engine = tr.engine_metrics(log, m0, m1, CORES)
-    out.update({k: v if k == "spark.core_busy_share" else v / n_reps  # per repetition
+    engine = tr.engine_metrics(log, windows, CORES)
+    out.update({k: v if k == "spark.core_busy_share" else v / len(windows)  # per repetition
                 for k, v in engine.items()})
 
     spans = tracer.spans

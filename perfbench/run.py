@@ -1,14 +1,16 @@
 """Outside-in benchmark of the tersets_spark engine.
 
-    python3 perfbench/run.py --workload compact_job --seed 1 --seconds 30 --trace 0
+    python3 perfbench/run.py --workload compact_job --seed 1 --seconds 10 --trace 0
 
 Workloads: ``compact_job`` (the spark-submit compaction job and its
-resume) and ``fuzzy_stream`` (streaming near-duplicate dedup and its two
-store compactions). ``--trace 0`` prints the end-to-end metrics;
-``--trace 1`` runs the same workload under span wrappers and Spark's
-event log, adds isolated layer probes, and prints the per-layer
-metrics. The last stdout line is one JSON object; the exit code is
-non-zero when a correctness check fails. See perfbench/README.md.
+resume) and ``fused_rollup`` (the fused flagship over a cached table).
+The ``fuzzy_stream`` flow (streaming near-duplicate dedup and its two
+store compactions) can also run on its own. ``--trace 0`` prints the
+end-to-end metrics; ``--trace 1`` runs the same workload under span
+wrappers and Spark's event log, adds isolated layer probes, and prints
+the per-layer metrics. The last stdout line is one JSON object; the
+exit code is non-zero when a correctness check fails. See
+perfbench/README.md.
 """
 
 from __future__ import annotations
@@ -33,7 +35,6 @@ def main() -> int:
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=int, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    p.add_argument("--keep", action="store_true", help="keep the run directory")
     args = p.parse_args()
     common.require_repo()
 
@@ -41,11 +42,12 @@ def main() -> int:
     common.pin_env(rdir)
     checks = common.Checks()
     probe_ms = common.calm_probe_ms()
+    steal0, total0 = common.cpu_jiffies()
     try:
         wl = importlib.import_module(args.workload)
         metrics, samples, notes, ctx = wl.run(args, T0, checks, rdir, bool(args.trace))
         notes.insert(0, f"nproc {os.cpu_count()}, local[{common.CORES}], "
-                        f"calm probe {probe_ms:.1f} ms (sort of 1e6 doubles, one core)")
+                        f"calm probe {probe_ms:.1f} ms (median of 5 sorts of 1e6 doubles, one core)")
         last = os.path.join(common.WORK, f"untraced-{args.workload}-s{args.seed}.json")
         if args.trace:
             import layers
@@ -61,8 +63,13 @@ def main() -> int:
             with open(last, "w") as fh:
                 json.dump({k: v for k, (v, _u) in metrics.items()}, fh)
     finally:
-        if not args.keep:
-            shutil.rmtree(rdir, ignore_errors=True)
+        shutil.rmtree(rdir, ignore_errors=True)
+    steal1, total1 = common.cpu_jiffies()
+    if total1 > total0:
+        # the share of the host's CPU time its hypervisor gave to other
+        # guests: high values mark a run taken while the host was slower
+        notes.append(f"host steal {(steal1 - steal0) / (total1 - total0) * 100:.1f} % of CPU time "
+                     f"during the run; calm probe at the end {common.calm_probe_ms():.1f} ms")
     common.emit(checks, metrics, samples, notes)
     return 0 if checks.failed == 0 else 1
 

@@ -106,13 +106,6 @@ def union_s(intervals) -> float:
     return total
 
 
-def self_time(spans: list[dict], idx: int) -> float:
-    """A span's duration minus the part its children cover."""
-    sp = spans[idx]
-    kids = [(c["start"], c["end"]) for c in spans if c["parent"] == idx]
-    return (sp["end"] - sp["start"]) - union_s(kids)
-
-
 def top_level(spans: list[dict], name: str) -> list[dict]:
     """Spans called ``name`` with no ancestor of the same name (a
     ``first()`` inside a ``collect()`` is counted once)."""
@@ -203,11 +196,11 @@ def tasks_of(log: dict, jobs: list[dict]) -> list[dict]:
     return [t for t in log["tasks"] if (t["app"], t["stage"]) in stages]
 
 
-def engine_metrics(log: dict, start: float, end: float, cores: int) -> dict:
-    """The ``spark.*`` layer over the wall interval [start, end]."""
-    jobs = jobs_in(log, start, end)
+def engine_metrics(log: dict, windows: list[tuple[float, float]], cores: int) -> dict:
+    """The ``spark.*`` layer over disjoint wall intervals (start, end)."""
+    jobs = [j for s, e in windows for j in jobs_in(log, s, e)]
     tasks = tasks_of(log, jobs)
-    wall = end - start
+    wall = sum(e - s for s, e in windows)
     busy = sum(t["end"] - t["start"] for t in tasks)
     return {
         "spark.jobs": len(jobs),
