@@ -38,13 +38,15 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--cores", type=int, default=None)
     args = p.parse_args(argv)
 
+    from concurrent.futures import ThreadPoolExecutor
+
     from pyspark.sql import functions as F
 
     from tersets_spark.methods import Method
     from tersets_spark.operators.compress import compress_blocks
     from tersets_spark.operators.lineage import append_metrics, run_with_lineage
     from tersets_spark.operators.retention import split_aged
-    from tersets_spark.operators.rollup import TIERS, tier_rollups
+    from tersets_spark.operators.rollup import TIERS, rollup_tokens_base, tiers_from_base
     from tersets_spark.session import get_spark
     from tersets_spark.sources.synth import synth_tokens
 
@@ -55,6 +57,7 @@ def main(argv: list[str] | None = None) -> None:
         "rle": Method.RunLengthEncoding,
     }[args.method]
     spark = get_spark("tersets_compact", cores=args.cores)
+    sc = spark.sparkContext
     t0 = time.time()
     df = (
         spark.read.parquet(args.input)
@@ -62,29 +65,44 @@ def main(argv: list[str] | None = None) -> None:
         else synth_tokens(spark, args.n_docs)
     )
     tiers = {t: TIERS[t] for t in args.tiers.split(",")}
+    # the finest tier is held in memory: the coarser tiers and the token
+    # count re-aggregate it instead of scanning the input again
+    base = rollup_tokens_base(df, min(tiers.values())).persist()
 
-    # 1) tier rollups (written whole; cheap relative to compression)
-    for name, roll in tier_rollups(df, tiers).items():
-        roll.write.mode("overwrite").parquet(f"{args.out}/tier_{name}")
+    def write_tiers() -> int:
+        sc.setJobDescription("tiers")
+        for name, roll in tiers_from_base(base, tiers).items():
+            roll.write.mode("overwrite").parquet(f"{args.out}/tier_{name}")
+        total = base.agg(F.sum("vcount")).collect()[0][0] or 0
+        base.unpersist()
+        return total
 
-    # 2) retention split + block compaction, bucketed with lineage/resume
     kept, aged = split_aged(df, args.raw_retention)
-    kept.write.mode("overwrite").parquet(f"{args.out}/raw_hot")
+
+    def write_raw_hot() -> None:
+        sc.setJobDescription("raw_hot")
+        kept.write.mode("overwrite").parquet(f"{args.out}/raw_hot")
 
     def process(bucket_df):
         return compress_blocks(bucket_df.select("doc_id", "tokens"), method)
 
-    run_id = run_with_lineage(
-        spark,
-        aged,
-        process,
-        out_path=f"{args.out}/blocks",
-        lineage_path=f"{args.out}/lineage",
-        run_id=args.run_id,
-        n_buckets=args.n_buckets,
-    )
-    wall = time.time() - t0
-    total_tokens = df.agg(F.sum("n_tok")).collect()[0][0] or 0
+    # 1) tier rollups and 2) the raw suffixes, overlapping 3) the aged
+    # prefixes' block compaction, bucketed with lineage/resume
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        tiers_done = pool.submit(write_tiers)
+        raw_hot_done = pool.submit(write_raw_hot)
+        run_id = run_with_lineage(
+            spark,
+            aged,
+            process,
+            out_path=f"{args.out}/blocks",
+            lineage_path=f"{args.out}/lineage",
+            run_id=args.run_id,
+            n_buckets=args.n_buckets,
+        )
+        total_tokens = tiers_done.result()
+        raw_hot_done.result()
+    wall_ms = int((time.time() - t0) * 1000)
     append_metrics(
         spark,
         f"{args.out}/metrics",
@@ -92,14 +110,15 @@ def main(argv: list[str] | None = None) -> None:
             {
                 "run_id": run_id,
                 "stage": "compact",
-                "tokens_per_sec": total_tokens / wall if wall else 0.0,
+                # tokens_per_sec * wall_ms / 1000 gives back the token count
+                "tokens_per_sec": total_tokens * 1000 / wall_ms if wall_ms else 0.0,
                 "compress_ratio": None,
-                "wall_ms": int(wall * 1000),
-                "parallelism": spark.sparkContext.defaultParallelism,
+                "wall_ms": wall_ms,
+                "parallelism": sc.defaultParallelism,
             }
         ],
     )
-    print(f"run_id={run_id} tokens={total_tokens} wall_s={wall:.1f}")
+    print(f"run_id={run_id} tokens={total_tokens} wall_s={wall_ms / 1000:.1f}")
     spark.stop()
 
 

@@ -7,19 +7,29 @@ unfinished partitions."
 Work unit: a deterministic *partition bucket*
 ``pb = pmod(xxhash64(doc_id), n_buckets)`` — stable across runs, cluster
 sizes and retries (never Spark's physical partition id, which is not).
-The orchestrator processes buckets in driver-side batches; each batch is
-one distributed job that (1) writes its output parquet with dynamic
-partition overwrite (idempotent on retry) and (2) appends one lineage
-row per bucket only after the write commits. A killed run leaves
-``status='done'`` rows only for committed buckets; the next run
-anti-joins them away and replays the rest.
+The orchestrator splits the pending buckets into batches, which run as
+overlapping Spark jobs from a small fixed thread pool. Each batch
+writes its output parquet with dynamic partition overwrite (idempotent
+on retry; concurrent batches touch disjoint ``pb=`` partitions and
+stage under their own ``.spark-staging-*`` dirs). One grouped job,
+running alongside the batch writes, computes every pending bucket's
+stats. The calling thread appends one lineage row per bucket of a batch
+only after that batch's write commits and the stats are in. Appends run
+one at a time, because concurrent appends would share
+``lineage/_temporary``, and each append holds one batch's buckets only.
+A killed run leaves ``status='done'`` rows only for committed buckets;
+the next run anti-joins them away and replays the rest. A batch whose
+``process_fn`` or write fails gets no lineage rows, while the other
+batches still commit; the failure is raised once they have.
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +44,9 @@ METRICS_SCHEMA = (
     "wall_ms long, parallelism int"
 )
 
+#: bucket batches (and the bucket-stats job) in flight at once
+BATCH_THREADS = 3
+
 
 def with_partition_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
@@ -42,33 +55,39 @@ def with_partition_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def read_done_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
-    try:
-        rows = (
-            spark.read.parquet(lineage_path)
-            .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-    except Exception:  # first run: lineage table absent
+    """Buckets of ``run_id`` with a ``done`` lineage row. Empty only when
+    the lineage table does not exist yet (the first run); an unreadable
+    table raises rather than replaying every bucket."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(lineage_path)
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
         return set()
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(lineage_path)
+        .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .select("partition_id")
+        .distinct()
+        .collect()
+    )
     return {r.partition_id for r in rows}
 
 
+def _append(spark: SparkSession, path: str, rows: list[dict], schema: str) -> None:
+    # a pandas frame plans a LocalTableScan; a list of dicts would plan a
+    # Python-RDD scan, several times slower per append
+    if rows:
+        spark.createDataFrame(pd.DataFrame(rows), schema=schema).write.mode(
+            "append"
+        ).parquet(path)
+
+
 def append_lineage(spark: SparkSession, lineage_path: str, rows: list[dict]) -> None:
-    if not rows:
-        return
-    spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(
-        lineage_path
-    )
+    _append(spark, lineage_path, rows, LINEAGE_SCHEMA)
 
 
 def append_metrics(spark: SparkSession, metrics_path: str, rows: list[dict]) -> None:
-    if not rows:
-        return
-    spark.createDataFrame(rows, schema=METRICS_SCHEMA).write.mode("append").parquet(
-        metrics_path
-    )
+    _append(spark, metrics_path, rows, METRICS_SCHEMA)
 
 
 def run_with_lineage(
@@ -93,17 +112,15 @@ def run_with_lineage(
     work = with_partition_bucket(df, n_buckets)
     done = read_done_buckets(spark, lineage_path, run_id)
     pending = [b for b in range(n_buckets) if b not in done]
-    for i in range(0, len(pending), buckets_per_batch):
-        batch = pending[i : i + buckets_per_batch]
-        started = time.time()
-        slice_df = work.filter(F.col("pb").isin(batch))
-        out = process_fn(slice_df)
-        if "pb" not in out.columns:
-            out = with_partition_bucket(out, n_buckets)
-        out.write.mode("overwrite").partitionBy("pb").parquet(out_path)
-        # lineage rows reflect what was just committed
-        stats = (
-            slice_df.groupBy("pb")
+    if not pending:
+        return run_id
+    sc = spark.sparkContext
+
+    def bucket_stats() -> dict:
+        sc.setJobDescription("bucket stats")
+        rows = (
+            work.filter(F.col("pb").isin(pending))
+            .groupBy("pb")
             .agg(
                 F.min("doc_id").alias("dmin"),
                 F.max("doc_id").alias("dmax"),
@@ -114,26 +131,55 @@ def run_with_lineage(
             )
             .collect()
         )
-        now = time.time()
-        append_lineage(
-            spark,
-            lineage_path,
-            [
-                {
-                    "run_id": run_id,
-                    "partition_id": int(r.pb),
-                    "doc_id_min": r.dmin,
-                    "doc_id_max": r.dmax,
-                    "n_series": int(r.n_series),
-                    "n_tokens": int(r.n_tokens or 0),
-                    "out_bytes": None,
-                    "status": "done",
-                    "started_ts": _ts(started),
-                    "finished_ts": _ts(now),
-                }
-                for r in stats
-            ],
-        )
+        return {int(r.pb): r for r in rows}
+
+    def write_batch(batch: list[int]) -> float:
+        sc.setJobDescription(f"blocks pb {batch[0]}-{batch[-1]}")
+        started = time.time()
+        out = process_fn(work.filter(F.col("pb").isin(batch)))
+        if "pb" not in out.columns:
+            out = with_partition_bucket(out, n_buckets)
+        out.write.mode("overwrite").partitionBy("pb").parquet(out_path)
+        return started
+
+    batches = [
+        pending[i : i + buckets_per_batch]
+        for i in range(0, len(pending), buckets_per_batch)
+    ]
+    with ThreadPoolExecutor(max_workers=BATCH_THREADS) as pool:
+        stats = pool.submit(bucket_stats)
+        writes = {pool.submit(write_batch, batch): batch for batch in batches}
+        # lineage rows reflect what was just committed; appended one
+        # batch at a time from this thread, in commit order
+        for fut in as_completed(writes):
+            if fut.exception() is not None:
+                continue
+            batch, started = writes[fut], fut.result()
+            by_pb = stats.result()
+            now = time.time()
+            sc.setJobDescription(f"lineage pb {batch[0]}-{batch[-1]}")
+            append_lineage(
+                spark,
+                lineage_path,
+                [
+                    {
+                        "run_id": run_id,
+                        "partition_id": int(r.pb),
+                        "doc_id_min": r.dmin,
+                        "doc_id_max": r.dmax,
+                        "n_series": int(r.n_series),
+                        "n_tokens": int(r.n_tokens or 0),
+                        "out_bytes": None,
+                        "status": "done",
+                        "started_ts": _ts(started),
+                        "finished_ts": _ts(now),
+                    }
+                    for r in (by_pb[b] for b in batch if b in by_pb)
+                ],
+            )
+        sc.setJobDescription(None)
+    for fut in writes:
+        fut.result()  # raise the first failed batch, after the rest committed
     return run_id
 
 

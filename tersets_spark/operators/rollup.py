@@ -95,12 +95,21 @@ def reaggregate(finer: DataFrame, factor: int) -> DataFrame:
 
 
 def tier_rollups(df: DataFrame, tiers: dict[str, int] | None = None) -> dict[str, DataFrame]:
-    """All retention tiers from one base pass: returns
-    {tier_name: (doc_id, bucket, vmin, vmax, vmean, vcount)}.
+    """All retention tiers of a token table from one base pass: returns
+    {tier_name: (doc_id, bucket, vmin, vmax, vmean, vcount)}. See
+    :func:`tiers_from_base`."""
+    tiers = dict(tiers or TIERS)
+    return tiers_from_base(rollup_tokens_base(df, min(tiers.values())), tiers)
 
-    The base tier is the finest requested width; every coarser tier is a
-    JVM-side re-aggregation of the previous one (widths must nest, as
-    1m/1h/1d do)."""
+
+def tiers_from_base(base: DataFrame, tiers: dict[str, int] | None = None) -> dict[str, DataFrame]:
+    """All retention tiers from ``base``, the :func:`rollup_tokens_base`
+    of the token table at the finest requested width.
+
+    Every coarser tier is a JVM-side re-aggregation of the previous one
+    (widths must nest, as 1m/1h/1d do). A caller that runs several
+    tiers persists ``base`` first, so the token table is scanned and the
+    base kernel runs once for all of them."""
     tiers = dict(tiers or TIERS)
     names = sorted(tiers, key=tiers.get)
     widths = [tiers[n] for n in names]
@@ -108,7 +117,7 @@ def tier_rollups(df: DataFrame, tiers: dict[str, int] | None = None) -> dict[str
         if b % a:
             raise ValueError(f"tier widths must nest: {b} % {a} != 0")
     out: dict[str, DataFrame] = {}
-    cur = rollup_tokens_base(df, widths[0])
+    cur = base
     out[names[0]] = cur
     for prev_w, name, w in zip(widths, names[1:], widths[1:]):
         cur = reaggregate(cur, w // prev_w)

@@ -83,3 +83,15 @@ def test_kill_and_resume(spark, tmp_path):
     # raw_hot holds the retained suffixes
     n_hot = spark.read.parquet(f"{out}/raw_hot").count()
     assert n_hot == 600
+    # the tiers are those of tier_rollups over the same input, row for row
+    from tersets_spark.operators.rollup import tier_rollups
+
+    for name, want in tier_rollups(src).items():
+        got = spark.read.parquet(f"{out}/tier_{name}")
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+    # the metrics row carries the input's token count
+    total = src.agg(F.sum("n_tok")).collect()[0][0]
+    assert f"tokens={total} " in rc.stdout
+    for m in spark.read.parquet(f"{out}/metrics").collect():
+        assert round(m.tokens_per_sec * m.wall_ms / 1000) == total

@@ -195,3 +195,66 @@ def test_lineage_resume(spark, tokens_df, tmp_path):
     orig = {r.doc_id: r.tokens for r in tokens_df.collect()}
     for r in restored.collect():
         assert r.tokens == orig[r.doc_id]
+
+
+def test_lineage_overlapped_batches(spark, tokens_df, tmp_path):
+    """Four bucket batches run overlapped: one lineage row per bucket,
+    each lineage file holds one batch's buckets, and a batch whose
+    process_fn raises leaves no lineage rows while the other batches
+    commit; the re-run replays that batch alone."""
+    import glob
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from tersets_spark.operators.lineage import read_done_buckets, run_with_lineage
+
+    out = str(tmp_path / "blocks")
+    lin = str(tmp_path / "lineage")
+    batches = [{0, 1}, {2, 3}, {4, 5}, {6, 7}]
+    lock = threading.Lock()
+    calls = []
+    failures = [RuntimeError("first batch fails")]
+
+    def process(df):
+        with lock:
+            calls.append(1)
+            if failures:
+                raise failures.pop()
+        return compress_blocks(df.select("doc_id", "tokens"), Method.BitPackedDeltaEncoding)
+
+    with pytest.raises(RuntimeError, match="first batch fails"):
+        run_with_lineage(
+            spark, tokens_df, process, out, lin, run_id="ov", n_buckets=8, buckets_per_batch=2
+        )
+    assert len(calls) == 4
+    missing = set(range(8)) - read_done_buckets(spark, lin, "ov")
+    assert missing in batches
+
+    calls.clear()
+    run_with_lineage(
+        spark, tokens_df, process, out, lin, run_id="ov", n_buckets=8, buckets_per_batch=2
+    )
+    assert len(calls) == 1
+    pids = spark.read.parquet(lin).select("partition_id").collect()
+    assert sorted(r.partition_id for r in pids) == list(range(8))
+    for f in glob.glob(f"{lin}/*.parquet"):
+        in_file = set(pq.read_table(f, columns=["partition_id"]).column(0).to_pylist())
+        assert any(in_file <= b for b in batches), (f, in_file)
+    restored = reassemble(decompress_blocks(spark.read.parquet(out))).collect()
+    assert {r.doc_id: r.tokens for r in restored} == {
+        r.doc_id: r.tokens for r in tokens_df.collect()
+    }
+
+
+def test_read_done_buckets_missing_and_corrupt(spark, tmp_path):
+    """No lineage table yet reads as no done buckets; a table that
+    cannot be read raises instead of replaying every bucket."""
+    from tersets_spark.operators.lineage import read_done_buckets
+
+    lin = tmp_path / "lineage"
+    assert read_done_buckets(spark, str(lin), "r") == set()
+    lin.mkdir()
+    (lin / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        read_done_buckets(spark, str(lin), "r")

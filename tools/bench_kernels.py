@@ -1,4 +1,6 @@
-"""Per-method single-core kernel microbenchmarks -> markdown table.
+"""Per-method single-core kernel microbenchmarks -> markdown table,
+plus the batch-vs-single A/Bs of the batched Chimp64 encoder and the
+Chimp128 / Elf batch decoders.
 
 Usage: python tools/bench_kernels.py   (appends/refreshes KERNELS.md)
 """
@@ -63,6 +65,7 @@ def main() -> None:
             lines.append(f"| {name} | {code} | - | - | {r} |")
         else:
             lines.append(f"| {name} | {code} | {c:.1f} | {d:.1f} | {r:.2f}x |")
+    lines += ["", *batch_ab_lines()]
     tail = ""
     marker = "<!-- hand-curated below"
     try:
@@ -75,6 +78,48 @@ def main() -> None:
     with open("/root/repo/KERNELS.md", "w") as f:
         f.write("\n".join(lines) + "\n" + tail)
     print("\n".join(lines))
+
+
+def _median_ratio(single, batch) -> float:
+    """Median over 9 interleaved pairs of single-path / batch-path
+    seconds, so a throttle window moves one pair, not the readout."""
+    return float(np.median([_t(single) / _t(batch) for _ in range(9)]))
+
+
+def batch_ab_lines() -> list[str]:
+    """Batch-vs-single A/Bs (byte identity is pinned by
+    tests/test_kernels_lossless.py)."""
+    from tersets_spark.kernels import chimp, elf
+
+    rng = np.random.default_rng(5)
+    rows = [rng.integers(0, 131072, 4096).astype(np.float64) for _ in range(64)]
+    flat = np.concatenate(rows)
+    offs = np.concatenate(([0], np.cumsum([r.size for r in rows]))).astype(np.int64)
+    enc = _median_ratio(
+        lambda: [chimp.compress_chimp64(r) for r in rows],
+        lambda: chimp.compress_batch(flat, offs),
+    )
+    lines = [
+        "Batch A/Bs, median of 9 interleaved single/batch pairs:",
+        "",
+        "| path | shape | batch speedup |",
+        "|---|---|---|",
+        f"| Chimp64 batch encode | 64 x 4096 tokens | {enc:.2f}x |",
+    ]
+    rng = np.random.default_rng(3)
+    lens = rng.integers(200, 400, 1000)
+    flat = np.concatenate([np.round(np.cumsum(rng.normal(0, 1, n)), 3) for n in lens])
+    offs = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
+    for name, comp, dec in (
+        ("Chimp128", chimp.compress_batch_chimp128, chimp.decompress_batch_chimp128),
+        ("Elf", elf.compress_batch, elf.decompress_batch),
+    ):
+        blobs = comp(flat, offs)
+        ratio = _median_ratio(
+            lambda: [registry.decompress(b) for b in blobs], lambda: dec(blobs)
+        )
+        lines.append(f"| {name} batch decode | 1000 x 200-400 values | {ratio:.2f}x |")
+    return lines
 
 
 def _t(fn) -> float:
