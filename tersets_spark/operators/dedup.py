@@ -15,8 +15,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -428,9 +426,8 @@ def _star_round(edges: DataFrame) -> DataFrame:
 def _min_label_components(edges) -> dict:
     """Driver-side union-find with path compression over an iterable of
     (u, v) int pairs; returns {node: component-minimum node} for every
-    node that appears. Shared by :func:`connected_components`' bounded
-    collect path and the incremental compaction's driver contraction —
-    labels are identical to the distributed star rounds by
+    node that appears. :func:`connected_components`' bounded collect
+    path — labels are identical to the distributed star rounds by
     construction."""
     parent: dict = {}
 
@@ -464,7 +461,7 @@ def _min_label_components(edges) -> dict:
 #: ``collect_threshold``): 100k canonical edges is ~1.6 MB — the same
 #: order as a broadcast-join small side, NOT a scale-dependent tune.
 #: Above it the O(log^2 n) distributed star rounds run unchanged.
-_CC_COLLECT_EDGES = int(os.environ.get("SPARK_GRAFT_CC_COLLECT_EDGES", "100000"))
+_CC_COLLECT_EDGES = 100_000
 
 
 def connected_components(

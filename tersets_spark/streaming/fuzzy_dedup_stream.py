@@ -34,8 +34,15 @@ Semantics (retraction-free, append-only — document carefully):
   only A. This is fundamental to streaming: an exact incremental CC
   would need the new edge (B,C) to merge clusters and retract the
   already-emitted survivor decision, and an append-only output cannot
-  retract. (Batch re-resolution over the survivor store is the
-  periodic-compaction answer if chain-exact groups are required.)
+  retract.
+
+Compaction restores chain-exact groups. :func:`recompact_fuzzy_store`
+and :func:`recompact_fuzzy_store_incremental` are thin entry points over
+one core, :func:`_recompact`, which re-resolves the delta docs against a
+prior compacted state (cluster map + all-docs LSH index). The
+incremental pass reads that state from the store; the full compaction
+runs the core over an empty prior state, where every seen doc is a
+delta doc and the pass is the global batch run.
 
 Scale notes (100 TB stream): per micro-batch cost is the in-batch
 pipeline (near-linear in batch size — capped LSH join, pair-restricted
@@ -54,6 +61,8 @@ production for snapshot isolation between concurrent readers).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -485,8 +494,8 @@ def _seen_texts(
     (in preference order) the replayable ``corpus`` or the survivors ∪
     dropped stores — with the r8-ADVICE coverage assertion: a seen doc
     with no text anywhere raises instead of silently vanishing from the
-    compacted decisions. Shared by the full and incremental
-    recompaction paths."""
+    compacted decisions. On success the caller owns (and unpersists)
+    the cached texts; on any error they are released here."""
     dropped_store = _read_store(spark, f"{store_path}/dropped")
     surv = _read_store(spark, f"{store_path}/survivors")
     if corpus is not None:
@@ -518,24 +527,28 @@ def _seen_texts(
     # re-run — a PARTIAL dropped store (some batches ran
     # keep_dropped_texts=False, a crash ate a partition) or a corpus
     # missing seen docs would otherwise make those docs silently vanish
-    # from the compacted decisions (r8 ADVICE medium). One bounded
-    # action over the seen corpus, same scale as the compaction itself.
-    n_missing = (
-        dec.select("doc_id")
-        .distinct()
-        .join(texts.select("doc_id"), "doc_id", "left_anti")
-        .count()
-    )
-    if n_missing:
-        raise ValueError(
-            f"recompact_fuzzy_store: {n_missing} seen doc(s) in the "
-            "decisions store have no text in "
-            + ("the supplied corpus" if corpus is not None
-               else "the survivors/dropped stores")
-            + " — refusing to silently drop them from the compacted "
-            "decisions (run every batch with keep_dropped_texts=True, "
-            "or pass the full replayable corpus)"
+    # from the compacted decisions. One bounded action over the seen
+    # corpus, same scale as the compaction itself.
+    try:
+        n_missing = (
+            dec.select("doc_id")
+            .distinct()
+            .join(texts.select("doc_id"), "doc_id", "left_anti")
+            .count()
         )
+        if n_missing:
+            raise ValueError(
+                f"recompact_fuzzy_store: {n_missing} seen doc(s) in the "
+                "decisions store have no text in "
+                + ("the supplied corpus" if corpus is not None
+                   else "the survivors/dropped stores")
+                + " — refusing to silently drop them from the compacted "
+                "decisions (run every batch with keep_dropped_texts=True, "
+                "or pass the full replayable corpus)"
+            )
+    except BaseException:
+        texts.unpersist()
+        raise
     return texts, dropped_store
 
 
@@ -681,6 +694,227 @@ def _write_compacted_state(
     return out
 
 
+#: the parameter row ``meta/`` persists; the incremental pass replays it
+_META_SCHEMA = (
+    "k_shingle int, threshold double, n_hashes int, bands int, "
+    "bucket_cap bigint, seed bigint, signature string"
+)
+_PARAMS = tuple(f.split()[0] for f in _META_SCHEMA.split(", "))
+_EMPTY = {"compacted": False, "reason": "empty store"}
+
+
+class _Prior(NamedTuple):
+    """Where an incremental pass starts: the commit id it compacts to
+    (the newest decisions batch) and the last compaction's state — its
+    commit id, cluster map and all-docs LSH index."""
+
+    cbid: int
+    c_last: int
+    clusters: DataFrame  # (doc_id, cluster_id)
+    allbuckets: DataFrame  # (doc_id, band, bucket, n_bucket)
+
+
+def _nothing_new(spark: SparkSession, store_path: str, c_last: int) -> dict:
+    # Still finish any interrupted cleanup: the commit marker is written
+    # before the stale-partition deletes, so a crash between them leaves
+    # duplicate doc rows in decisions/ until these deletes land.
+    for sub in _STORE_SUBDIRS:
+        _delete_batch_partitions_below(spark, f"{store_path}/{sub}", c_last)
+    return {
+        "compacted": False,
+        "reason": "nothing new since last compaction",
+        "batch": c_last,
+    }
+
+
+def _recompact(
+    spark: SparkSession,
+    store_path: str,
+    dec: DataFrame,
+    params: dict,
+    prior: _Prior | None,
+    corpus: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    max_iter: int,
+) -> dict:
+    """The one compaction body behind both public entry points; ``dec``
+    is the decisions store as the entry point read it.
+
+    The delta docs are the seen docs outside ``prior``'s cluster map;
+    with ``prior=None`` that is every seen doc and there are no old
+    clusters, so the pass below is the global batch run. Steps:
+
+    - band the delta docs once; each row carries its bucket's combined
+      population (delta + stored ``n_bucket``), which ``bucket_cap``
+      filters — the global run's cap rule for every pair generated here;
+    - candidates = delta self-join ∪ delta ⋈ the stored all-docs index
+      on (band, bucket) — old docs include dropped ones, which is what
+      lets a new doc heal a chain through an old dropped doc;
+    - exact-Jaccard verify only those pairs;
+    - link every old doc of a candidate pair to its stored cluster
+      label, so one :func:`connected_components` call over the verified
+      edges merges whole old components through their labels (a new doc
+      bridging two old components merges them, as the global run would);
+    - relabel: old docs follow their label's new root, delta docs their
+      own; untouched clusters keep their labels verbatim.
+
+    With ``prior=None`` every old-side step is skipped. Every cache is
+    released on every exit path."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    p = params
+    keys = ["band", "bucket"]
+    caches: list[DataFrame] = []
+    try:
+        if prior is not None:
+            # the corpus-sized index is read three times below: cache the
+            # one store scan
+            allb = prior.allbuckets.persist()
+            caches.append(allb)
+            new_ids = (
+                dec.filter(F.col("batch") > prior.c_last)
+                .select("doc_id")
+                .distinct()
+                .join(prior.clusters.select("doc_id"), "doc_id", "left_anti")
+            )
+        # _seen_texts' coverage count and the commit-id lookup (full) or
+        # the delta count and the index warm-up (incremental) are
+        # independent actions: overlap them
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            f_texts = pool.submit(
+                _seen_texts, spark, store_path, dec, corpus, text_col, id_col
+            )
+            if prior is None:
+                f_head = pool.submit(lambda: dec.agg(F.max("batch")).first()[0])
+            else:
+                f_warm = pool.submit(allb.count)
+                f_head = pool.submit(new_ids.count)
+            texts, dropped_store = f_texts.result()
+            caches.append(texts)
+            head = f_head.result()
+            if prior is not None:
+                f_warm.result()
+        if prior is None:
+            if head is None:
+                # readable store, zero decision rows (a stream that only
+                # ever processed empty micro-batches)
+                return dict(_EMPTY)
+            cbid, new_ids, new_texts = int(head), texts.select("doc_id"), texts
+        else:
+            if head == 0:
+                return _nothing_new(spark, store_path, prior.c_last)
+            cbid, new_texts = prior.cbid, texts.join(new_ids, "doc_id", "left_semi")
+
+        def bump(rows: DataFrame, counts: DataFrame) -> DataFrame:
+            return rows.join(counts, keys, "left").select(
+                "doc_id", *keys,
+                (F.col("n_bucket") + F.coalesce("_n", F.lit(0))).alias("n_bucket"),
+            )
+
+        # n_bucket is the cap filter's count-over-window on the join key
+        # itself: same shuffle key as the self-join, no extra exchange.
+        # Cached before any fan-out read (the AQE lazy-cache trap).
+        banded = _banded(
+            new_texts, p["k_shingle"], p["n_hashes"], p["bands"], p["seed"],
+            p["signature"],
+        ).withColumn("n_bucket", F.count("*").over(Window.partitionBy(*keys)))
+        caches.append(banded.persist())
+        banded.count()
+        allbuckets = banded
+        if prior is not None:
+            # combined populations; both count maps are delta-sized
+            old_n = (
+                allb.join(banded.select(*keys), keys, "left_semi")
+                .select(*keys, F.col("n_bucket").alias("_n"))
+                .distinct()
+            )
+            new_n = banded.select(*keys, F.col("n_bucket").alias("_n")).distinct()
+            banded = bump(banded, old_n)
+            caches.append(banded.persist())
+            banded.count()
+            allbuckets = bump(allb, new_n).unionByName(banded)
+
+        ok = (
+            banded if p["bucket_cap"] is None
+            else banded.filter(F.col("n_bucket") <= p["bucket_cap"])
+        )
+        left, right = ok.alias("l"), ok.alias("r")
+        cand = left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        ).select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
+        if prior is not None:
+            cand = cand.unionByName(
+                ok.alias("n").join(allb.alias("o"), keys).select(
+                    F.least("n.doc_id", "o.doc_id").alias("id_a"),
+                    F.greatest("n.doc_id", "o.doc_id").alias("id_b"),
+                )
+            )
+        cand = cand.distinct()
+        caches.append(cand.persist())
+        n_cand = cand.count()  # materialize BEFORE the verify join's fan-out
+
+        edges = ngram_jaccard_pairs(
+            texts, cand, text_col="text", id_col="doc_id",
+            k_shingle=p["k_shingle"], threshold=p["threshold"],
+        ).select("id_a", "id_b")
+        if prior is not None:
+            # link every old candidate doc to its stored label: an edge
+            # within one old component, so the components are unchanged
+            # and each old component enters CC whole, labelled by its min
+            ids = cand.select(F.col("id_a").alias("doc_id")).union(
+                cand.select(F.col("id_b").alias("doc_id"))
+            )
+            edges = edges.unionByName(
+                prior.clusters.join(ids, "doc_id", "left_semi").select(
+                    F.col("doc_id").alias("id_a"),
+                    F.col("cluster_id").alias("id_b"),
+                )
+            )
+        stats: dict = {}
+        labels = connected_components(
+            edges, max_iter=max_iter, stats=stats,
+            collect_threshold=_CC_COLLECT_EDGES,
+        ).select(F.col("node").alias("_n"), F.col("cluster_id").alias("_root"))
+
+        def relabel(df: DataFrame, key: str) -> DataFrame:
+            return df.join(labels, F.col(key) == F.col("_n"), "left").select(
+                "doc_id", F.coalesce("_root", key).alias("cluster_id")
+            )
+
+        cluster_map = relabel(new_ids, "doc_id")
+        if prior is not None:
+            cluster_map = relabel(prior.clusters, "cluster_id").unionByName(
+                cluster_map
+            )
+        # one partition: one meta file, not one per default-parallelism slot
+        meta_row = spark.createDataFrame(
+            [tuple(p[c] for c in _PARAMS)], _META_SCHEMA
+        ).coalesce(1)
+        # dropped/ is skipped only when a replayable corpus is the archive
+        # AND the store never kept dropped texts; with corpus=None it is
+        # always written — compaction itself can demote docs (e.g. re-run
+        # with a lower threshold than the stream used), and their texts
+        # must stay recompactable.
+        out = _write_compacted_state(
+            spark, store_path, cbid, texts, cluster_map, allbuckets, meta_row,
+            write_dropped=(dropped_store is not None or corpus is None),
+            stats=stats,
+            extra={
+                "mode": "full" if prior is None else "incremental",
+                "n_candidate_pairs": int(n_cand),
+            },
+        )
+        out["n_new"] = out["n_docs"] if prior is None else int(head)
+        return out
+    finally:
+        for df in caches:
+            df.unpersist()
+
+
 def recompact_fuzzy_store(
     spark: SparkSession,
     store_path: str,
@@ -696,161 +930,57 @@ def recompact_fuzzy_store(
     signature: str = "fast",
     max_iter: int = 25,
 ) -> dict:
-    """Periodic re-resolution compaction for the streaming fuzzy-dedup
-    store (r7 verdict #4 — the closure the module docstring names):
-    re-run the batch :func:`fuzzy_dedup_pipeline` GLOBALLY over every
-    doc the stream has seen and rewrite the store as ONE compacted
-    history partition, restoring chain-exact connected-component groups
-    at the compaction boundary. After compaction the store's decisions
-    are byte-for-byte what a single-batch run over the full seen corpus
-    would emit (``survivor`` / ``dup_in_batch``, matched null) — the
-    pinned greedy-arrival-order chain-break divergence is healed.
+    """Full re-resolution compaction of the streaming fuzzy-dedup store:
+    the compaction core (:func:`_recompact`) over an EMPTY prior state,
+    i.e. the batch :func:`fuzzy_dedup_pipeline` run globally over every
+    doc the stream has seen (identical banding, ``bucket_cap`` filter,
+    self-join, verify and CC), with the store rewritten as ONE compacted
+    history partition. Afterwards the store's decisions are what a
+    single-batch run over the full seen corpus emits (``survivor`` /
+    ``dup_in_batch``, matched null): the greedy arrival-order chain
+    breaks of the stream are healed.
 
-    The docs the stream dropped are required to heal chains THROUGH a
-    dropped doc, so the full seen corpus comes from (in preference
-    order): ``corpus`` — a replayable archive of the original stream
-    (the production norm at 100 TB: streams land in object storage
-    anyway, so compaction re-reads instead of double-storing) — or the
-    ``dropped/`` store written by
-    ``process_fuzzy_batch(keep_dropped_texts=True)``. With neither, a
-    store that ever dropped a doc raises instead of silently compacting
-    to weaker survivor-only semantics.
+    Healing chains THROUGH a dropped doc needs the dropped docs' texts,
+    so the seen corpus comes from (in preference order) ``corpus`` — a
+    replayable archive of the original stream — or the ``dropped/``
+    store written by ``process_fuzzy_batch(keep_dropped_texts=True)``.
+    With neither, a store that ever dropped a doc raises instead of
+    compacting to weaker survivor-only semantics; a seen doc with no
+    text anywhere raises too.
 
-    Crash safety (r9: stage-then-rename — see
-    :func:`_write_compacted_state`): every compacted output is first
-    written once to a hidden ``.staged_batch-N`` dir (a crash anywhere
-    in that phase leaves the visible store byte-identical and the
-    staged leftovers are swept on the next run), then the staged dirs
-    rename into the highest seen batch partition, then stale lower
-    partitions drop; a crash between promote and the drops leaves
-    duplicate history that the next compaction run (or this one,
-    re-run) collapses — ``dropDuplicates(doc_id)`` at entry makes the
-    re-run deterministic. Within the promotions, ``dropped/`` goes
-    FIRST (r8 ADVICE): the new dropped set holds the texts of every
-    currently-non-survivor doc, so once it lands, every seen doc's
-    text exists in dropped ∪ old-survivors regardless of where the
-    process dies — replacing ``survivors/`` first would leave a
-    batch-``cbid`` survivor that compaction demotes to dup with its
-    text in NEITHER store. ``clusters/`` goes LAST (the commit marker
-    the incremental path keys on). The entry-time coverage assertion
-    (every doc_id in ``decisions/`` must have a text) turns any
-    residual partial-state hole — including some batches having run
-    ``keep_dropped_texts=False`` — into a loud error instead of a doc
-    silently vanishing from decisions. Use a transactional table format
-    in production for atomic swap semantics (a rename is a copy on
-    object stores).
+    Besides decisions/survivors/buckets/dropped, the compaction persists
+    the state an incremental pass starts from: ``clusters/`` (doc_id ->
+    component-min label for every seen doc, singletons included),
+    ``allbuckets/`` (the LSH index rows of every seen doc, with the
+    per-(band, bucket) population in ``n_bucket``) and ``meta/`` (these
+    parameters).
 
-    Round 9: compaction additionally persists the state that makes
-    :func:`recompact_fuzzy_store_incremental` possible — ``clusters/``
-    (doc_id -> component-min label for EVERY seen doc, singletons
-    included), ``allbuckets/`` (the LSH index rows of every seen doc —
-    not just survivors — with the per-(band,bucket) population in
-    ``n_bucket``), and ``meta/`` (one row with the algorithm parameters
-    so the incremental pass replays bit-compatible banding). The
-    candidate stage reuses that one banding pass (the former
-    implementation banded twice: once inside the pipeline, once for the
-    survivor index), so the extra stores cost no additional signature
-    work; semantics are unchanged vs :func:`fuzzy_dedup_pipeline` —
-    identical banding, ``bucket_cap`` filter, self-join, verify, and CC
-    stages over the same rows.
+    Crash safety (see :func:`_write_compacted_state`): every output is
+    staged to a hidden ``.staged_batch-N`` dir first (a crash there
+    leaves the visible store byte-identical), then renamed into the
+    highest seen batch partition with ``dropped/`` FIRST (so every seen
+    doc's text survives every later crash window) and ``clusters/``
+    LAST (the commit marker), then stale lower partitions drop; a
+    re-run collapses any duplicate history a crash left. Use a
+    transactional table format in production for atomic swap semantics
+    (a rename is a copy on object stores).
 
     Returns ``{"compacted", "mode", "batch", "n_docs", "n_survivors",
-    "cc_rounds"}``."""
-    surv = _read_store(spark, f"{store_path}/survivors")
+    "n_new", "n_candidate_pairs", "cc_rounds"}``; ``n_new`` equals
+    ``n_docs``."""
+    params = {
+        "k_shingle": k_shingle, "threshold": float(threshold),
+        "n_hashes": n_hashes, "bands": bands,
+        "bucket_cap": None if bucket_cap is None else int(bucket_cap),
+        "seed": int(seed), "signature": signature,
+    }
     dec = _read_store(spark, f"{store_path}/decisions")
-    if surv is None or dec is None:
-        return {"compacted": False, "reason": "empty store"}
-    # the max-batch lookup and _seen_texts' coverage count are
-    # independent actions — overlap them (optimization guide §2.6). On
-    # the readable-but-empty store _seen_texts is a harmless no-op scan
-    # (zero seen docs -> zero missing), so running it concurrently with
-    # the emptiness check loses nothing.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        f_texts = _pool.submit(
-            _seen_texts, spark, store_path, dec, corpus, text_col, id_col
-        )
-        max_batch = dec.agg(F.max("batch")).first()[0]
-        texts, dropped_store = f_texts.result()
-    if max_batch is None:
-        # readable store, zero decision rows (a stream that only ever
-        # processed empty micro-batches writes empty partitions) —
-        # nothing to compact; int(None) would TypeError (r8 ADVICE)
-        texts.unpersist()
-        return {"compacted": False, "reason": "empty store"}
-
-    # One banding pass over the full seen corpus feeds BOTH candidate
-    # generation (identical to fuzzy_dedup_pipeline's stages: cap filter
-    # -> (band,bucket) self-join -> distinct pairs -> exact-Jaccard
-    # verify -> min-label CC) and the persisted all-docs index the
-    # incremental path probes. n_bucket is _cap_buckets' count-over-
-    # window on the join key itself — same shuffle key, no extra
-    # exchange.
-    banded_all = _banded(texts, k_shingle, n_hashes, bands, seed, signature)
-    allbuckets = banded_all.withColumn(
-        "n_bucket", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).persist()
-    allbuckets.count()  # materialize BEFORE the fan-out reads (AQE trap)
-    capped = (
-        allbuckets if bucket_cap is None
-        else allbuckets.filter(F.col("n_bucket") <= bucket_cap)
+    if dec is None or _read_store(spark, f"{store_path}/survivors") is None:
+        return dict(_EMPTY)
+    return _recompact(
+        spark, store_path, dec, params, None, corpus, text_col, id_col,
+        max_iter,
     )
-    left, right = capped.alias("l"), capped.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-        .persist()
-    )
-    cand.count()  # materialize BEFORE the verify join's 3-way fan-out
-    verified = ngram_jaccard_pairs(
-        texts, cand, text_col="text", id_col="doc_id",
-        k_shingle=k_shingle, threshold=threshold,
-    )
-    stats: dict = {}
-    labels = connected_components(
-        verified, max_iter=max_iter, stats=stats,
-        collect_threshold=_CC_COLLECT_EDGES,
-    )
-    # connected_components eagerly checkpoints its edge set first,
-    # severing lineage from the candidate cache — safe to release after.
-    lab = labels.select(
-        F.col("node").alias("doc_id"), F.col("cluster_id").alias("_root")
-    )
-    cluster_map = (
-        texts.select("doc_id")
-        .join(lab, "doc_id", "left")
-        .select("doc_id", F.coalesce("_root", "doc_id").alias("cluster_id"))
-    )
-
-    meta_row = spark.createDataFrame(
-        [(k_shingle, float(threshold), n_hashes, bands,
-          None if bucket_cap is None else int(bucket_cap),
-          int(seed), signature)],
-        "k_shingle int, threshold double, n_hashes int, bands int, "
-        "bucket_cap bigint, seed bigint, signature string",
-    )
-    # dropped/ is skipped only when a replayable corpus is the archive
-    # AND the store never kept dropped texts; with corpus=None it is
-    # always written — compaction itself can demote docs (e.g. re-run
-    # with a lower threshold than the stream used), and their texts
-    # must stay recompactable.
-    out = _write_compacted_state(
-        spark, store_path, int(max_batch), texts, cluster_map,
-        allbuckets, meta_row,
-        write_dropped=(dropped_store is not None or corpus is None),
-        stats=stats, extra={"mode": "full"},
-    )
-    cand.unpersist()
-    allbuckets.unpersist()
-    texts.unpersist()
-    return out
 
 
 def recompact_fuzzy_store_incremental(
@@ -861,97 +991,51 @@ def recompact_fuzzy_store_incremental(
     id_col: str = "doc_id",
     max_iter: int = 25,
 ) -> dict:
-    """Incremental re-resolution compaction: restore chain-exact
-    connected-component groups after new stream batches WITHOUT
-    re-running signatures/verify/CC over the whole seen corpus (the
-    r8-verdict scale note on :func:`recompact_fuzzy_store` — the full
-    re-run is a scheduled heavyweight job; this is the maintenance pass
-    between full runs).
+    """Incremental re-resolution compaction: the compaction core
+    (:func:`_recompact`) started from the state the last compaction
+    persisted, so only the docs of batches newer than that compaction
+    are banded and verified (``O(Δ)`` signature, verify and CC work)
+    and old components enter CC through their stored labels. The
+    rewrite of the store partitions is still ``O(corpus)`` I/O.
 
-    Requires a prior :func:`recompact_fuzzy_store` (which persists the
-    ``clusters/`` map, the all-docs ``allbuckets/`` LSH index, and the
-    ``meta/`` parameter row this pass replays). Algorithm parameters are
-    READ FROM ``meta/`` — not accepted here — so the incremental banding
-    is bit-compatible with the stored index by construction.
+    Requires a prior :func:`recompact_fuzzy_store`: the ``clusters/``
+    map, the ``allbuckets/`` index and the ``meta/`` parameter row it
+    persists. Parameters are read from ``meta/``, not accepted here, so
+    the delta banding is bit-compatible with the stored index.
 
-    Algorithm (cluster contraction): only components containing a doc
-    from a batch newer than the last compaction can change, so
-    - band ONLY the delta docs (``O(Δ)`` signature work),
-    - candidate pairs = delta self-join ∪ delta ⋈ ``allbuckets/`` on
-      (band, bucket) — the stored index covers every old doc,
-      INCLUDING dropped ones, which is what lets a new doc heal a chain
-      through an old dropped doc,
-    - exact-Jaccard verify only those pairs (``O(Δ·dup-rate)``),
-    - contract each old component to its stored min-label and run CC on
-      the tiny contracted graph (an edge to old doc *d* becomes an edge
-      to ``cluster(d)``; a new doc bridging two old components merges
-      them, exactly as the global run would),
-    - expand: component-min relabel of member clusters' docs; untouched
-      clusters keep their labels verbatim.
-    The rewrite of the store partitions is still ``O(corpus)`` I/O —
-    it is a compaction — but the compute is proportional to the delta,
-    not the corpus (bench: ``fuzzy_recompact_incr`` vs
-    ``fuzzy_recompact``).
+    Parity contract (pinned by tests): the compacted state is identical
+    to :func:`recompact_fuzzy_store` over the same seen corpus whenever
+    ``bucket_cap`` does not bind on a bucket containing a delta doc.
+    Pinned divergence when it does: the global re-run drops ALL pairs of
+    an over-cap bucket — including old-old edges it previously honored —
+    while this pass never retracts edges already folded into
+    ``clusters/`` (known duplicate groups are not forgotten because
+    boilerplate later flooded their bucket).
 
-    Parity contract (pinned by tests): the compacted state is
-    byte-identical to :func:`recompact_fuzzy_store` over the same seen
-    corpus whenever ``bucket_cap`` does not bind on a bucket containing
-    a delta doc. Pinned divergence when it does: the global re-run
-    drops ALL pairs of an over-cap bucket — including old-old edges it
-    previously honored — while the incremental pass never retracts
-    edges already folded into ``clusters/`` (monotone: known duplicate
-    groups are not forgotten because boilerplate later flooded their
-    bucket). New-pair generation applies the cap on the COMBINED
-    (old + delta) bucket population, matching the global rule for every
-    pair this pass is responsible for.
+    Crash safety: the write order of the full compaction (``dropped/``
+    first, ``clusters/`` last); a crash before the marker makes the
+    next run redo the pass idempotently.
 
-    Crash safety: same write order as the full path (dropped first,
-    ``clusters/`` last as the commit marker — see
-    :func:`_write_compacted_state`); a crash before the marker makes
-    the next run redo the whole incremental pass idempotently (the
-    stream's partitions above the last marker are untouched until the
-    final deletes).
-
-    Returns ``{"compacted", "mode", "batch", "n_docs", "n_survivors",
-    "n_new", "n_candidate_pairs", "cc_rounds"}``."""
-    import os as _os
-    import time as _time
-
-    _phases: "dict[str, float] | None" = (
-        {} if _os.environ.get("SPARK_GRAFT_RC_PHASES") else None
-    )
-    _tprev = _time.perf_counter()
-
-    def _mark(tag: str) -> None:
-        nonlocal _tprev
-        if _phases is not None:
-            now = _time.perf_counter()
-            _phases[tag] = round(now - _tprev, 3)
-            _tprev = now
-
-    surv = _read_store(spark, f"{store_path}/survivors")
+    Returns the keys of :func:`recompact_fuzzy_store`, with ``mode``
+    ``"incremental"``."""
     dec = _read_store(spark, f"{store_path}/decisions")
-    if surv is None or dec is None:
-        return {"compacted": False, "reason": "empty store"}
+    if dec is None or _read_store(spark, f"{store_path}/survivors") is None:
+        return dict(_EMPTY)
     clus = _read_store(spark, f"{store_path}/clusters")
     meta_df = _read_store(spark, f"{store_path}/meta")
     allb = _read_store(spark, f"{store_path}/allbuckets")
     have_state = not (clus is None or meta_df is None or allb is None)
-    # the three head lookups are independent tiny jobs — overlap them
-    # (optimization guide §2.6) instead of paying three sequential
-    # fixed-overhead round trips
+    # three independent tiny head lookups: overlap them
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        f_maxb = _pool.submit(lambda: dec.agg(F.max("batch")).first()[0])
-        f_clast = (
-            _pool.submit(lambda: clus.agg(F.max("batch")).first()[0])
-            if have_state else None
-        )
-        f_meta = _pool.submit(meta_df.collect) if have_state else None
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_maxb = pool.submit(lambda: dec.agg(F.max("batch")).first()[0])
+        if have_state:
+            f_clast = pool.submit(lambda: clus.agg(F.max("batch")).first()[0])
+            f_meta = pool.submit(meta_df.collect)
         max_batch = f_maxb.result()
     if max_batch is None:
-        return {"compacted": False, "reason": "empty store"}
+        return dict(_EMPTY)
     if not have_state:
         raise ValueError(
             "recompact_fuzzy_store_incremental needs the cluster map / "
@@ -960,287 +1044,23 @@ def recompact_fuzzy_store_incremental(
             "once first"
         )
     c_last = int(f_clast.result())
-    cbid = int(max_batch)
-    if cbid <= c_last:
-        # nothing arrived since the last compaction. Still finish any
-        # interrupted cleanup: the commit marker is written before the
-        # stale-partition deletes, so a crash between them leaves
-        # duplicate doc rows in decisions/ until these deletes land.
-        for sub in _STORE_SUBDIRS:
-            _delete_batch_partitions_below(spark, f"{store_path}/{sub}", c_last)
-        return {
-            "compacted": False,
-            "reason": "nothing new since last compaction",
-            "batch": c_last,
-        }
+    if int(max_batch) <= c_last:
+        return _nothing_new(spark, store_path, c_last)
     meta = next(r for r in f_meta.result() if int(r["batch"]) == c_last)
-    k_shingle = int(meta["k_shingle"])
-    threshold = float(meta["threshold"])
-    n_hashes = int(meta["n_hashes"])
-    bands = int(meta["bands"])
-    bucket_cap = None if meta["bucket_cap"] is None else int(meta["bucket_cap"])
-    seed = int(meta["seed"])
-    signature = str(meta["signature"])
-    _mark("meta")
-
-    old_clusters = clus.filter(F.col("batch") == c_last).select(
-        "doc_id", "cluster_id"
-    )
-    # the corpus-sized index is read 3x (bucket populations, old-side
-    # candidate rows, the updated-index rewrite) — cache the one store
-    # scan. Every consumer probes it against a broadcast (never
-    # broadcast-builds it), so the cache is populated lazily by the
-    # first action without the AQE fan-out trap; caller unpersists via
-    # the cleanup block at the end.
-    allb = (
-        allb.filter(F.col("batch") == c_last)
-        .select("doc_id", "band", "bucket", "n_bucket")
-        .persist()
-    )
-    new_ids = (
-        dec.filter(F.col("batch") > c_last)
-        .select("doc_id")
-        .distinct()
-        .join(old_clusters.select("doc_id"), "doc_id", "left_anti")
-    )
-    # _seen_texts' coverage count, the delta count, and the allbuckets
-    # cache warm-up are independent actions on disjoint inputs —
-    # overlap them (guide §2.6). Warming allb here moves its cache
-    # population (measured 2.7 s as the first sequential consumer) off
-    # the critical path.
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        f_texts = _pool.submit(
-            _seen_texts, spark, store_path, dec, corpus, text_col, id_col
-        )
-        f_allb = _pool.submit(allb.count)
-        n_new = new_ids.count()
-        texts, dropped_store = f_texts.result()
-        f_allb.result()
-    _mark("seen_texts+n_new")
-    if n_new == 0:
-        for sub in _STORE_SUBDIRS:
-            _delete_batch_partitions_below(spark, f"{store_path}/{sub}", c_last)
-        return {
-            "compacted": False,
-            "reason": "nothing new since last compaction",
-            "batch": c_last,
-        }
-    new_texts = texts.join(new_ids, "doc_id", "left_semi")
-    banded_new = _banded(
-        new_texts, k_shingle, n_hashes, bands, seed, signature
-    ).persist()
-    banded_new.count()  # materialize: read by counts, pairs, index union
-    _mark("banded_new")
-
-    # combined per-bucket populations for buckets touched by the delta:
-    # delta-side counts are tiny; the old side comes off the stored
-    # n_bucket column via a broadcast semi-join — the corpus-sized index
-    # is never shuffled, only map-side filtered.
-    new_counts = banded_new.groupBy("band", "bucket").agg(
-        F.count("*").alias("_n_new")
-    )
-    old_bc = (
-        allb.join(
-            F.broadcast(new_counts.select("band", "bucket")),
-            ["band", "bucket"], "left_semi",
-        )
-        .select("band", "bucket", "n_bucket")
-        .distinct()
-    )
-    bucket_tot = new_counts.join(old_bc, ["band", "bucket"], "left").select(
-        "band", "bucket",
-        (F.col("_n_new") + F.coalesce(F.col("n_bucket"), F.lit(0))).alias(
-            "n_tot"
+    prior = _Prior(
+        int(max_batch),
+        c_last,
+        clus.filter(F.col("batch") == c_last).select("doc_id", "cluster_id"),
+        allb.filter(F.col("batch") == c_last).select(
+            "doc_id", "band", "bucket", "n_bucket"
         ),
     )
-    ok = (
-        bucket_tot if bucket_cap is None
-        else bucket_tot.filter(F.col("n_tot") <= bucket_cap)
+    return _recompact(
+        spark, store_path, dec, {c: meta[c] for c in _PARAMS}, prior,
+        corpus, text_col, id_col, max_iter,
     )
-    ok_keys = ok.select("band", "bucket").persist()
-    ok_keys.count()  # materialize: broadcast 3x below
-    _mark("ok_keys")
-    bnew_ok = banded_new.join(F.broadcast(ok_keys), ["band", "bucket"], "left_semi")
-    old_ok = allb.join(F.broadcast(ok_keys), ["band", "bucket"], "left_semi")
-    ln, rn = bnew_ok.alias("l"), bnew_ok.alias("r")
-    nn_pairs = (
-        ln.join(
-            rn,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-    )
-    no_pairs = (
-        bnew_ok.alias("n")
-        .join(old_ok.alias("o"), ["band", "bucket"])
-        .select(
-            F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("id_a"),
-            F.greatest(F.col("n.doc_id"), F.col("o.doc_id")).alias("id_b"),
-        )
-    )
-    cand = nn_pairs.unionByName(no_pairs).distinct().persist()
-    n_cand = cand.count()  # materialize BEFORE the verify fan-out
-    _mark("cand")
-    verified_plan = ngram_jaccard_pairs(
-        texts, cand, text_col="text", id_col="doc_id",
-        k_shingle=k_shingle, threshold=threshold,
-    )
-    stats: dict = {}
-    if n_cand <= _CC_COLLECT_EDGES:
-        # bounded driver contraction (round 10): the verified edge set
-        # is at most n_cand pairs — already known — so ONE collect
-        # fetches it, one broadcast semi-join collect fetches the
-        # touched old labels, and the contraction + union-find run on
-        # the driver. Replaces the former eager checkpoint + CC action
-        # in which each of the TWO oc_small broadcast builds re-ran the
-        # cluster-store scan and the vids distinct. Labels identical
-        # (same contraction, same component-min rule).
-        ver_rows = verified_plan.collect()
-        _mark("verify")
-        vid_list = sorted(
-            {i for r in ver_rows for i in (r["id_a"], r["id_b"])}
-        )
-        if vid_list:
-            vids_df = spark.createDataFrame(
-                pd.DataFrame({"doc_id": pd.Series(vid_list, dtype="int64")}),
-                schema="doc_id long",
-            )
-            oc_rows = old_clusters.join(
-                F.broadcast(vids_df), "doc_id", "left_semi"
-            ).collect()
-        else:
-            oc_rows = []
-        cmap = {r["doc_id"]: r["cluster_id"] for r in oc_rows}
-        from tersets_spark.operators.dedup import _min_label_components
 
-        # self-loops (both endpoints contracting to one old cluster) are
-        # harmless: the node labels to itself, which coalesces to the
-        # same value the distributed path's u != v filter produces
-        labels_map = _min_label_components(
-            (cmap.get(r["id_a"], r["id_a"]), cmap.get(r["id_b"], r["id_b"]))
-            for r in ver_rows
-        )
-        stats["cc_rounds"] = 0
-        lab = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "_n": pd.Series(list(labels_map), dtype="int64"),
-                    "_root": pd.Series(
-                        list(labels_map.values()), dtype="int64"
-                    ),
-                }
-            ),
-            schema="_n long, _root long",
-        )
-    else:
-        # materialize the verified edge set ONCE: it fans out into vids
-        # and the contracted plan's TWO broadcast builds below, and each
-        # lazy re-evaluation would re-run the shingle joins (measured
-        # 12.6 s CC vs 3.0 s for the full path's, which checkpoints its
-        # edges first)
-        verified = verified_plan.localCheckpoint(eager=True)
-        _mark("verify")
 
-        # cluster contraction: rewrite each OLD endpoint to its stored
-        # component label (new docs keep their own ids — id spaces are
-        # disjoint by construction of new_ids), then CC the tiny graph.
-        vids = (
-            verified.select(F.col("id_a").alias("doc_id"))
-            .unionByName(verified.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        oc_small = old_clusters.join(F.broadcast(vids), "doc_id", "left_semi")
-        contracted = (
-            verified.select("id_a", "id_b")
-            .join(
-                F.broadcast(
-                    oc_small.select(
-                        F.col("doc_id").alias("id_a"),
-                        F.col("cluster_id").alias("_ca"),
-                    )
-                ),
-                "id_a", "left",
-            )
-            .join(
-                F.broadcast(
-                    oc_small.select(
-                        F.col("doc_id").alias("id_b"),
-                        F.col("cluster_id").alias("_cb"),
-                    )
-                ),
-                "id_b", "left",
-            )
-            .select(
-                F.coalesce("_ca", F.col("id_a")).alias("id_a"),
-                F.coalesce("_cb", F.col("id_b")).alias("id_b"),
-            )
-        )
-        labels = connected_components(
-            contracted, max_iter=max_iter, stats=stats,
-            collect_threshold=_CC_COLLECT_EDGES,
-        )
-        lab = labels.select(
-            F.col("node").alias("_n"), F.col("cluster_id").alias("_root")
-        )
-    # expand: docs of a relabeled old component follow their label; the
-    # corpus-sized maps are only ever broadcast-joined (lab is tiny).
-    final_old = (
-        old_clusters.join(
-            F.broadcast(lab), old_clusters["cluster_id"] == F.col("_n"), "left"
-        )
-        .select(
-            "doc_id",
-            F.coalesce("_root", F.col("cluster_id")).alias("cluster_id"),
-        )
-    )
-    final_new = (
-        new_ids.join(F.broadcast(lab), new_ids["doc_id"] == F.col("_n"), "left")
-        .select(
-            "doc_id", F.coalesce("_root", F.col("doc_id")).alias("cluster_id")
-        )
-    )
-    cluster_map = final_old.unionByName(final_new)
-
-    # updated all-docs index: old rows keep their banding, counts bumped
-    # by the delta; delta rows carry the combined population. The row
-    # set equals what the full path would band from scratch.
-    allb_updated = allb.join(
-        F.broadcast(new_counts), ["band", "bucket"], "left"
-    ).select(
-        "doc_id", "band", "bucket",
-        (F.col("n_bucket") + F.coalesce(F.col("_n_new"), F.lit(0))).alias(
-            "n_bucket"
-        ),
-    )
-    bnew_rows = banded_new.join(
-        F.broadcast(bucket_tot), ["band", "bucket"]
-    ).select("doc_id", "band", "bucket", F.col("n_tot").alias("n_bucket"))
-    allbuckets_out = allb_updated.unionByName(bnew_rows)
-
-    _mark("cc_relabel")
-    meta_row = meta_df.filter(F.col("batch") == c_last).drop("batch")
-    out = _write_compacted_state(
-        spark, store_path, cbid, texts, cluster_map,
-        allbuckets_out, meta_row,
-        write_dropped=(dropped_store is not None or corpus is None),
-        stats=stats,
-        extra={
-            "mode": "incremental",
-            "n_new": int(n_new),
-            "n_candidate_pairs": int(n_cand),
-        },
-    )
-    _mark("write_state")
-    if _phases is not None:
-        out["phases"] = _phases
-    cand.unpersist()
-    ok_keys.unpersist()
-    banded_new.unpersist()
-    allb.unpersist()
-    texts.unpersist()
-    return out
 
 
 def read_decisions(spark: SparkSession, store_path: str) -> DataFrame:

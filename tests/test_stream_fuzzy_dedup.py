@@ -258,8 +258,10 @@ def test_recompact_partial_dropped_store_raises(spark, tmp_path):
     process_fuzzy_batch(b1, inc, batch_id=1, keep_dropped_texts=True, **params)
     assert _decisions(spark, inc)[2][0] == "dup_in_batch"
 
+    spark.catalog.clearCache()
     with pytest.raises(ValueError, match="no text"):
         recompact_fuzzy_store(spark, inc, **params)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # the full replayable corpus remains the documented recovery path
     corpus = spark.createDataFrame(
@@ -429,7 +431,14 @@ def test_incremental_recompact_heals_chain_and_matches_full(spark, tmp_path):
     assert _decisions(spark, inc) == _decisions(spark, glob)
 
 
-def test_incremental_matches_full_recompact_multibatch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "cc_bound,full_before,incr_before",
+    [(None, 2, 3), (0, 2, 3), (None, 1, None)],
+    ids=["cc_default", "cc_star", "big_delta"],
+)
+def test_incremental_matches_full_recompact_multibatch(
+    spark, tmp_path, monkeypatch, cc_bound, full_before, incr_before
+):
     """Hard parity over 4 batches with a cluster MERGE: two stores see
     identical batches; store A full-compacts after batch 1 then runs the
     incremental pass twice (chained — the second rides the first's
@@ -437,11 +446,23 @@ def test_incremental_matches_full_recompact_multibatch(spark, tmp_path):
     bridges the two previously-separate clusters, so the contracted CC
     must merge old components. Decisions, cluster map, survivor texts,
     AND the all-docs index (incl. the incrementally-maintained
-    n_bucket populations) are compared row-for-row."""
+    n_bucket populations) are compared row-for-row.
+
+    ``big_delta``: store A full-compacts after batch 0 only, so the one
+    incremental pass's delta (5 docs) outnumbers the compacted state
+    (3 docs). ``cc_star``: a CC collect bound of 0 sends every non-empty
+    edge set through the distributed star rounds instead of the driver
+    union-find."""
+    import sys as _sys
+
     from tersets_spark.streaming.fuzzy_dedup_stream import (
         recompact_fuzzy_store,
         recompact_fuzzy_store_incremental,
     )
+
+    if cc_bound is not None:
+        mod = _sys.modules["tersets_spark.streaming.fuzzy_dedup_stream"]
+        monkeypatch.setattr(mod, "_CC_COLLECT_EDGES", cc_bound)
 
     base = (G1 + " ") * 4
     tail = (G2 + " ") * 4
@@ -465,9 +486,9 @@ def test_incremental_matches_full_recompact_multibatch(spark, tmp_path):
     sa, sb = str(tmp_path / "a"), str(tmp_path / "b")
     for store in (sa, sb):
         for bid, rows in enumerate(batches):
-            if store == sa and bid == 2:
+            if store == sa and bid == full_before:
                 assert recompact_fuzzy_store(spark, store, **params)["compacted"]
-            if store == sa and bid == 3:
+            if store == sa and bid == incr_before:
                 r = recompact_fuzzy_store_incremental(spark, store)
                 assert r["compacted"] and r["mode"] == "incremental"
             df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -480,6 +501,9 @@ def test_incremental_matches_full_recompact_multibatch(spark, tmp_path):
     assert rb["compacted"] and rb["mode"] == "full"
     assert ra["n_docs"] == rb["n_docs"] == 8
     assert ra["n_survivors"] == rb["n_survivors"]
+    if incr_before is None:
+        assert ra["n_new"] == 5 > ra["n_docs"] - ra["n_new"]
+    assert (ra["cc_rounds"] > 0) == (rb["cc_rounds"] > 0) == (cc_bound == 0)
     assert _store_state(spark, sa) == _store_state(spark, sb)
     # the merge actually happened: one component holds both seeds + the
     # bridge + the straggler, labeled by the global min doc id
@@ -641,8 +665,10 @@ def test_recompact_crash_before_promotion_leaves_store_untouched(
     monkeypatch.setattr(mod, "_promote_staged", boom)
     import pytest as _pytest
 
+    spark.catalog.clearCache()
     with _pytest.raises(RuntimeError, match="injected crash"):
         mod.recompact_fuzzy_store(spark, inc, **params)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # visible store unchanged — staged dirs are hidden from _read_store
     assert _snapshot() == before
