@@ -1054,13 +1054,15 @@ _ANN_TOPK_ORACLE = """
 
 
 def minhash_pairs(
-    spark: SparkSession, sf_dir: str, n_hashes: int = 64, bands: int = 16
+    spark: SparkSession, sf_dir: str, n_hashes: int = 30, bands: int = 5
 ) -> DataFrame:
-    """MinHash-LSH candidates + exact-Jaccard verification. The driver
-    correctness query runs 64 hashes / 16 bands (high recall so the
-    exact all-pairs oracle matches); bench.py times the same pipeline at
-    16/4 — the signature pass is 4x cheaper and recall only affects
-    which candidates reach the (timed) verify join, not correctness."""
+    """Full-corpus MinHash-LSH candidates + exact-Jaccard verification
+    (>= 0.5). The driver row ``minhash_jaccard_dups`` runs the defaults,
+    30 hashes / 5 bands, the fuzzy pipeline's configuration; its oracle
+    replays the numpy band buckets in DuckDB (:func:`_minhash_bands_sql`)
+    and then the cap, self-join and verify, so it is an exact replay
+    with no recall assumption and no quadratic stage. bench.py times the
+    same pipeline at 16/4 and 64/16."""
     _prep(spark)
     from tersets_spark.operators.dedup import (
         minhash_lsh_candidates,
@@ -1084,33 +1086,6 @@ def minhash_pairs(
     # driver/bench run one query per pass and clear the cache between
     # passes; long-lived drivers should use fuzzy_dedup_pipeline, which
     # releases its candidate cache itself.
-    pairs = ngram_jaccard_pairs(docs, cands, threshold=0.5)
-    return pairs.select("id_a", "id_b", _trunc(F.col("jaccard")).alias("jaccard"))
-
-
-def _minhash_jaccard_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-corpus MinHash-LSH near-dup pairs with the AUDITABLE
-    signature path (round 7, closing the r6 sf0.1 oracle skip): the
-    md5-derived 60-bit minhashes are bit-identically replayable in
-    DuckDB (byte-swapped ``md5_number_upper``), so the oracle reruns
-    candidate generation EXACTLY instead of falling back to an
-    all-pairs Jaccard that is quadratic in corpus size — no recall
-    assumption, non-quadratic at every sf. The numpy rolling-hash
-    signature path stays as the bench/production fast path
-    (``minhash_pairs``; same banding/cap/verify operators downstream,
-    unit+property-tested)."""
-    _prep(spark)
-    from tersets_spark.operators.dedup import (
-        minhash_lsh_candidates_auditable,
-        ngram_jaccard_pairs,
-    )
-
-    docs = _documents(spark, sf_dir).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    cands = minhash_lsh_candidates_auditable(docs).persist()
-    cands.count()  # materialize before the verify fan-out (r4/r5 trap)
-    # cache lifetime intentional (see minhash_pairs): consumed at collect
     pairs = ngram_jaccard_pairs(docs, cands, threshold=0.5)
     return pairs.select("id_a", "id_b", _trunc(F.col("jaccard")).alias("jaccard"))
 
@@ -1305,16 +1280,16 @@ def _fuzzy_corpus_shrink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors → the per-source corpus-shrink decision a training
     pipeline executes. Unlike ``dedup_fuzzy_groups`` (bounded
     doc_id < 200 pair set, deep CC iteration), this row's pair set is
-    the REAL verifier's output over every document; the auditable md5
-    signature path makes the oracle an exact pipeline replay plus a
-    recursive-CTE min-label fixpoint — non-quadratic at every sf."""
+    the REAL verifier's output over every document; the oracle is an
+    exact pipeline replay (the numpy band buckets replayed in SQL) plus
+    a recursive-CTE min-label fixpoint — non-quadratic at every sf."""
     _prep(spark)
     from tersets_spark.operators.dedup import fuzzy_dedup_pipeline
 
     docs_all = _documents(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text", "source"
     )
-    groups = fuzzy_dedup_pipeline(docs_all, signature="auditable")
+    groups = fuzzy_dedup_pipeline(docs_all)
     joined = docs_all.join(
         groups.select("doc_id", "is_survivor"), "doc_id", "left"
     )
@@ -1328,46 +1303,91 @@ def _fuzzy_corpus_shrink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Spark's 60-bit signature hash is conv(substring(md5(g:seed),1,15),16,10);
-#: DuckDB replays it from md5_number_upper (little-endian first 8 digest
-#: bytes): byte-swap to big-endian, drop the low nibble (15 hex chars).
-#: Max term 255 * 2^52 < 2^63, so everything stays ANSI-safe in BIGINT.
-_BE60_SQL = """(
-        CAST((u      ) & 255 AS BIGINT) * 4503599627370496 +
-        CAST((u >>  8) & 255 AS BIGINT) * 17592186044416 +
-        CAST((u >> 16) & 255 AS BIGINT) * 68719476736 +
-        CAST((u >> 24) & 255 AS BIGINT) * 268435456 +
-        CAST((u >> 32) & 255 AS BIGINT) * 1048576 +
-        CAST((u >> 40) & 255 AS BIGINT) * 4096 +
-        CAST((u >> 48) & 255 AS BIGINT) * 16 +
-        CAST((u >> 56) & 255 AS BIGINT) // 16
-    )"""
+def _minhash_bands_sql(
+    k_shingle: int = 5,
+    n_hashes: int = 30,
+    bands: int = 5,
+    seed: int = 42,
+) -> str:
+    """A DuckDB SELECT of ``(doc_id, band, bucket)`` rows equal bit for
+    bit to ``dedup._band_buckets_batch`` over ``documents``:
+    the engine's one MinHash signature, replayed in SQL.
 
-#: EXACT replay of minhash_lsh_candidates_auditable (30 hashes, 5 bands
-#: of 6 rows, bucket_cap 1024) + the ngram_jaccard_pairs verify at
-#: threshold 0.5 — the full-corpus pair set with NO quadratic stage and
-#: NO LSH-recall assumption (both engines run the identical pipeline).
-#: CTE chain ends at `vpairs`; heavy intermediates are MATERIALIZED so
-#: DuckDB's inliner does not re-expand them per consumer (CLAUDE.md).
-_MINHASH_AUDIT_CTES = f"""
+    - Shingle hash: Horner's rule (FNV prime) over ``lead(c, 1..k-1)``
+      of the codepoints ``c = unicode(substring(text, i, 1))``; a text
+      shorter than ``k_shingle`` is one shingle over all its codepoints,
+      an empty or NULL text hashes to 0.
+    - Minhash j: ``min((a_j * h + b_j) mod 2^64)``, with the ``a_j`` /
+      ``b_j`` literals drawn from ``np.random.default_rng(seed)`` exactly
+      as the engine draws them.
+    - Band: ``list_reduce`` fold ``x * 1000003 + y`` over the band's
+      minhashes in j order, then mapped to the signed int64 numpy's
+      ``astype(np.int64)`` gives.
+
+    All arithmetic is ``HUGEINT`` with ``& (2^64 - 1)`` after every
+    multiply; no product overflows (``a_j < 2^63``, the FNV prime
+    ``< 2^41``, ``1000003 < 2^20``). ``UHUGEINT %`` gives the same bits
+    but measured about 40x slower over 4.5M multiply-mods, and ``sum()``
+    over ``UHUGEINT`` returns DOUBLE in DuckDB 1.0, which drops bits:
+    neither is used."""
+    rng = np.random.default_rng(seed)
+    a = rng.integers(1, 2**63, n_hashes, dtype=np.uint64) | np.uint64(1)
+    b = rng.integers(0, 2**63, n_hashes, dtype=np.uint64)
+    rows = n_hashes // bands
+    mask = f"{2**64 - 1}::HUGEINT"
+    consts = ", ".join(
+        f"({j}, {int(a[j])}::HUGEINT, {int(b[j])}::HUGEINT)"
+        for j in range(rows * bands)
+    )
+    h = "c::HUGEINT"
+    for i in range(1, k_shingle):  # a NULL lead (the text ended) is a no-op step
+        h = f"(({h} * if(c{i} IS NULL, 1, 1099511628211) + coalesce(c{i}, 0)) & {mask})"
+    leads = ", ".join(f"lead(c, {i}) OVER w AS c{i}" for i in range(1, k_shingle))
+    return f"""
+        SELECT doc_id, band,
+               CAST(CASE WHEN u >= {2**63} THEN u - {2**64} ELSE u END AS BIGINT)
+                 AS bucket
+        FROM (
+            SELECT doc_id, j // {rows} AS band,
+                   list_reduce(list(mh ORDER BY j),
+                               (x, y) -> (x * 1000003 + y) & {mask}) AS u
+            FROM (
+                SELECT s.doc_id, k.j, min((k.a * s.h + k.b) & {mask}) AS mh
+                FROM (
+                    SELECT doc_id, {h} AS h FROM (
+                        SELECT doc_id, i, n, c, {leads}
+                        FROM (
+                            SELECT doc_id, length(text) AS n, i,
+                                   unicode(substring(text, i, 1)) AS c
+                            FROM (SELECT doc_id, text,
+                                         unnest(generate_series(1, length(text))) AS i
+                                  FROM documents)
+                        )
+                        WINDOW w AS (PARTITION BY doc_id ORDER BY i)
+                    ) WHERE i <= greatest(n - {k_shingle - 1}, 1)
+                    UNION ALL
+                    SELECT doc_id, 0::HUGEINT FROM documents
+                    WHERE coalesce(length(text), 0) = 0
+                ) s CROSS JOIN (VALUES {consts}) k(j, a, b)
+                GROUP BY s.doc_id, k.j
+            ) GROUP BY doc_id, j // {rows}
+        )"""
+
+
+#: EXACT replay of minhash_lsh_candidates (30 hashes, 5 bands of 6 rows,
+#: bucket_cap 1024) + the ngram_jaccard_pairs verify at threshold 0.5 —
+#: the full-corpus pair set with NO quadratic stage and NO LSH-recall
+#: assumption (both engines run the identical pipeline). CTE chain ends
+#: at `vpairs`; heavy intermediates are MATERIALIZED so DuckDB's inliner
+#: does not re-expand them per consumer (CLAUDE.md).
+_MINHASH_CTES = f"""
     sh AS MATERIALIZED (
         SELECT doc_id,
                list_distinct(list_transform(
                    generate_series(1, greatest(length(text) - 4, 1)),
                    i -> substring(text, i, 5))) AS s
         FROM documents
-    ), ex AS (
-        SELECT doc_id, unnest(s) AS g FROM sh
-    ), hx AS (
-        SELECT e.doc_id, j.seed, md5_number_upper(e.g || ':' || j.seed) AS u
-        FROM ex e CROSS JOIN (SELECT unnest(generate_series(0, 29)) AS seed) j
-    ), sigs AS MATERIALIZED (
-        SELECT doc_id, seed, min({_BE60_SQL}) AS mh
-        FROM hx GROUP BY doc_id, seed
-    ), buckets AS (
-        SELECT doc_id, seed // 6 AS band,
-               string_agg(mh::VARCHAR, ':' ORDER BY seed) AS bucket
-        FROM sigs GROUP BY doc_id, seed // 6
+    ), buckets AS MATERIALIZED ({_minhash_bands_sql()}
     ), capped AS (
         SELECT doc_id, band, bucket FROM (
             SELECT *, count(*) OVER (PARTITION BY band, bucket) AS c
@@ -1388,14 +1408,14 @@ _MINHASH_AUDIT_CTES = f"""
     )"""
 
 _MINHASH_JACCARD_ORACLE = f"""
-    WITH {_MINHASH_AUDIT_CTES}
+    WITH {_MINHASH_CTES}
     SELECT id_a, id_b, floor(j * 1e4) / 1e4 AS jaccard FROM vpairs
 """
 
 #: exact replay of the full-corpus pipeline, then the min-label
 #: fixpoint over the verified pairs and the per-source shrink decision
 _FUZZY_CORPUS_SHRINK_ORACLE = f"""
-    WITH RECURSIVE {_MINHASH_AUDIT_CTES}
+    WITH RECURSIVE {_MINHASH_CTES}
     , edges AS (
         SELECT id_a AS eu, id_b AS ev FROM vpairs
         UNION
@@ -2169,8 +2189,7 @@ def _stream_fuzzy_parity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/fuzzy_dedup_stream.process_fuzzy_batch — in-batch
     fuzzy_dedup_pipeline, then cross-batch LSH lookup + Jaccard verify
     against the survivor store) over the FULL corpus as 3 deterministic
-    micro-batches (batch = doc_id % 3) on the auditable md5 signature
-    path, and emit every per-doc decision:
+    micro-batches (batch = doc_id % 3), and emit every per-doc decision:
     (doc_id, status in {survivor, dup_in_batch, dup_of_earlier},
     matched = earliest verified earlier-batch survivor or null, batch).
 
@@ -2200,7 +2219,6 @@ def _stream_fuzzy_parity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                 docs.filter(F.col("doc_id") % 3 == b),
                 tmp,
                 b,
-                signature="auditable",
             )
         # sever lineage from the temp store before it is removed
         return (
@@ -2245,18 +2263,9 @@ _STREAM_FUZZY_PARITY_ORACLE = f"""
                    generate_series(1, greatest(length(text) - 4, 1)),
                    i -> substring(text, i, 5))) AS s
         FROM documents
-    ), ex AS (
-        SELECT doc_id, bt, unnest(s) AS g FROM sh
-    ), hx AS (
-        SELECT e.doc_id, e.bt, j.seed, md5_number_upper(e.g || ':' || j.seed) AS u
-        FROM ex e CROSS JOIN (SELECT unnest(generate_series(0, 29)) AS seed) j
-    ), sigs AS MATERIALIZED (
-        SELECT doc_id, bt, seed, min({_BE60_SQL}) AS mh
-        FROM hx GROUP BY doc_id, bt, seed
     ), buckets AS MATERIALIZED (
-        SELECT doc_id, bt, seed // 6 AS band,
-               string_agg(mh::VARCHAR, ':' ORDER BY seed) AS bucket
-        FROM sigs GROUP BY doc_id, bt, seed // 6
+        SELECT doc_id, doc_id % 3 AS bt, band, bucket
+        FROM ({_minhash_bands_sql()})
     ), capped AS (
         SELECT doc_id, bt, band, bucket FROM (
             SELECT *, count(*) OVER (PARTITION BY bt, band, bucket) AS c
@@ -2323,7 +2332,7 @@ def _fuzzy_recompact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     new batch via cluster contraction. Emits the post-compaction
     per-doc decisions, so BOTH compaction modes sit on this row's hash.
 
-    The oracle is the GLOBAL pipeline replay (the same exact md5 LSH +
+    The oracle is the GLOBAL pipeline replay (the same exact LSH +
     cap + verify + recursive-CTE CC fixpoint the fuzzy_corpus_shrink
     oracle uses): compaction's whole contract is that afterwards the
     store equals a single-batch run, so a hash match here proves both
@@ -2348,12 +2357,11 @@ def _fuzzy_recompact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for b in range(3):
             if b == 2:
-                recompact_fuzzy_store(spark, tmp, signature="auditable")
+                recompact_fuzzy_store(spark, tmp)
             process_fuzzy_batch(
                 docs.filter(F.col("doc_id") % 3 == b),
                 tmp,
                 b,
-                signature="auditable",
                 keep_dropped_texts=True,
             )
         recompact_fuzzy_store_incremental(spark, tmp)
@@ -2380,7 +2388,7 @@ def _fuzzy_recompact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: store — not hardcoded to 2 (r8 ADVICE: a fixture whose doc_ids skip
 #: residue 2 would otherwise mismatch).
 _FUZZY_RECOMPACT_ORACLE = f"""
-    WITH RECURSIVE {_MINHASH_AUDIT_CTES}
+    WITH RECURSIVE {_MINHASH_CTES}
     , edges AS (
         SELECT id_a AS eu, id_b AS ev FROM vpairs
         UNION
@@ -2683,7 +2691,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tier_rollup_chars_1m": _tier_rollup_tokens_query(60, _char_tokens),
         "fused_tier_rollup_1m": _fused_tier_rollup_query,
         "dedup_exact": _dedup_exact_query,
-        "minhash_jaccard_dups": _minhash_jaccard_query,
+        "minhash_jaccard_dups": minhash_pairs,
         "ngram_jaccard_verify": _ngram_jaccard_query,
         "dedup_fuzzy_groups": _dedup_fuzzy_groups_query,
         "fuzzy_shrink_by_source": _fuzzy_shrink_query,

@@ -305,17 +305,16 @@ def main() -> None:
     secondary["rollup_events_1m"] = entrymod._rollup_events_query("1m")
     secondary["rollup_events_1h"] = entrymod._rollup_events_query("1h")
     # bench-scale minhash: same pipeline, 16 hashes / 4 bands (the
-    # correctness query keeps 64/16 so the sf0.01 oracle is unchanged)
+    # driver row runs 30/5)
     secondary["minhash_jaccard_dups"] = lambda sp, d: entrymod.minhash_pairs(
         sp, d, n_hashes=16, bands=4
     )
     # full-corpus fuzzy shrink (r6 verdict #1): the PRODUCTION dedup
     # flow — LSH candidates -> exact Jaccard verify -> connected
     # components -> keep-one survivors -> per-source shrink — timed
-    # end-to-end over every document. numpy 'fast' signatures (the
-    # production default; the correctness row keeps 'auditable' so the
-    # sf0.01 oracle stays an exact replay). CC star-round counts are
-    # recorded per pass in detail.fuzzy_cc_rounds.
+    # end-to-end over every document, on the one numpy signature path
+    # (the correctness row's oracle replays it exactly). CC star-round
+    # counts are recorded per pass in detail.fuzzy_cc_rounds.
     fuzzy_cc_rounds: list = []
 
     def run_fuzzy(sp, d):
@@ -325,7 +324,7 @@ def main() -> None:
             F.col("doc_id").cast("long").alias("doc_id"), "text", "source"
         )
         st: dict = {}
-        groups = fuzzy_dedup_pipeline(docs_all, signature="fast", stats=st)
+        groups = fuzzy_dedup_pipeline(docs_all, stats=st)
         fuzzy_cc_rounds.append(st.get("cc_rounds"))
         joined = docs_all.join(
             groups.select("doc_id", "is_survivor"), "doc_id", "left"
@@ -371,7 +370,7 @@ def main() -> None:
     # streaming-store re-resolution compaction (r8 verdict #4): the
     # stream's scheduled heavyweight maintenance job was correctness-
     # only (fuzzy_recompact_parity). Per pass: rebuild the 3-micro-batch
-    # store UNTIMED (the driver row's shape, 'fast' signatures like
+    # store UNTIMED (the driver row's shape, the same signatures as
     # fuzzy_corpus_shrink — the cold-pipeline number it compares to),
     # then time recompact_fuzzy_store alone. CC rounds land in
     # detail.fuzzy_recompact.
@@ -396,11 +395,10 @@ def main() -> None:
                     docs_all.filter(F.col("doc_id") % 3 == b),
                     tmp,
                     b,
-                    signature="fast",
                     keep_dropped_texts=True,
                 )
             t0 = time.time()
-            res = recompact_fuzzy_store(sp, tmp, signature="fast")
+            res = recompact_fuzzy_store(sp, tmp)
             dt = time.time() - t0
             recompact_detail["cc_rounds"].append(res.get("cc_rounds"))
             recompact_detail["n_docs"] = res.get("n_docs")
@@ -438,15 +436,13 @@ def main() -> None:
                     docs_all.filter(F.col("doc_id") % 4 == b),
                     tmp,
                     b,
-                    signature="fast",
                     keep_dropped_texts=True,
                 )
-            recompact_fuzzy_store(sp, tmp, signature="fast")
+            recompact_fuzzy_store(sp, tmp)
             process_fuzzy_batch(
                 docs_all.filter(F.col("doc_id") % 4 == 3),
                 tmp,
                 3,
-                signature="fast",
                 keep_dropped_texts=True,
             )
             t0 = time.time()
@@ -559,9 +555,9 @@ def main() -> None:
         ]
         timings[name] = round(min(calm_ts), 3)
 
-    # cross-round comparability anchor: ONE timing of minhash at the
-    # correctness config (64 hashes / 16 bands — what the sf0.01 oracle
-    # checks), so round-over-round deltas aren't config changes
+    # cross-round comparability anchor: ONE timing of minhash at 64
+    # hashes / 16 bands (the driver row's config before round 7), so
+    # round-over-round deltas aren't config changes
     def run_anchor() -> float:
         t0 = time.time()
         entrymod.minhash_pairs(spark, sf_dir, n_hashes=64, bands=16).count()

@@ -1,11 +1,12 @@
 """Deduplication operators for training-data pipelines.
 
-All candidate generation is JVM-side (Catalyst expressions — no Python
-in the hot path); only SimHash uses a vectorized pandas UDF.
+Candidate generation is JVM-side Catalyst except for the MinHash
+signatures, which come from one vectorized pandas UDF
+(:func:`minhash_index`); SimHash is pure Catalyst.
 
 Scale design:
 * exact: one hash-groupBy shuffle, map-side partial agg free.
-* MinHash+LSH: shingle → K minhashes (per-row array expressions) →
+* MinHash+LSH: shingle → K minhashes (one numpy pass per Arrow batch) →
   band buckets → self-join on (band, bucket). The self-join key space
   grows with corpus size, so the shuffle is uniform; banding keeps the
   candidate set near-linear. Verification joins only candidate pairs.
@@ -53,17 +54,6 @@ def shingles(text_col: str, k: int = 5) -> F.Column:
             f"i -> substring({text_col}, i, {k}))"
         )
     )
-
-
-def minhash_signature(shingle_col: str, n_hashes: int = 32) -> list[F.Column]:
-    """K independent minhashes: min over shingles of xxhash64(shingle,
-    seed_j) — all Catalyst, no UDF."""
-    return [
-        F.array_min(
-            F.expr(f"transform({shingle_col}, s -> xxhash64(s, {j}))")
-        ).alias(f"mh_{j}")
-        for j in range(n_hashes)
-    ]
 
 
 _HASH_MOD = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -114,6 +104,38 @@ def _band_buckets_batch(
     return pd.Series(out)
 
 
+def minhash_index(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k_shingle: int,
+    n_hashes: int,
+    bands: int,
+    seed: int,
+) -> DataFrame:
+    """UNCAPPED ``(_id, band, bucket)`` MinHash-LSH index rows: one
+    vectorized pandas UDF pass (:func:`_band_buckets_batch`) per doc,
+    exploded to one row per band. The batch candidate join, the stream's
+    survivor-store index and both store compactions band through here,
+    so every lookup is bit-compatible with in-batch candidate
+    generation; the DuckDB oracle replays the same buckets
+    (``_minhash_bands_sql`` in the driver entry)."""
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def band_buckets(texts: pd.Series) -> pd.Series:
+        return _band_buckets_batch(texts, k_shingle, n_hashes, bands, seed)
+
+    # the function is pure, but posexplode's pushed-down null/size
+    # filter otherwise duplicates the evaluation below AND above the
+    # filter (guide §4.4's double-eval pathology — measured
+    # ArrowEvalPython x4 in the self-join plan, x2 after this)
+    band_buckets = band_buckets.asNondeterministic()
+
+    return df.select(
+        F.col(id_col).alias("_id"), band_buckets(F.col(text_col)).alias("_bb")
+    ).select("_id", F.posexplode("_bb").alias("band", "bucket"))
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -132,133 +154,24 @@ def minhash_lsh_candidates(
     Signatures come from one vectorized pandas UDF pass; the band-bucket
     self-join is the only shuffle, keyed on (band, bucket) — uniform key
     space, candidate volume near-linear in true duplicates."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_buckets(texts: pd.Series) -> pd.Series:
-        return _band_buckets_batch(texts, k_shingle, n_hashes, bands, seed)
-
-    # the function is pure, but posexplode's pushed-down null/size
-    # filter otherwise duplicates the evaluation below AND above the
-    # filter (guide §4.4's double-eval pathology — measured
-    # ArrowEvalPython x4 in the self-join plan, x2 after this)
-    band_buckets = band_buckets.asNondeterministic()
-
-    banded = (
-        df.select(F.col(id_col).alias("_id"), band_buckets(F.col(text_col)).alias("_bb"))
-        .select("_id", F.posexplode("_bb").alias("band", "bucket"))
-    )
-    banded = _cap_buckets(banded, ["band", "bucket"], bucket_cap)
-    left = banded.alias("l")
-    right = banded.alias("r")
+    index = minhash_index(df, text_col, id_col, k_shingle, n_hashes, bands, seed)
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
+        _lsh_self_join(index, ["band", "bucket"], bucket_cap)
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .distinct()
     )
 
 
-def _md5_hash60(col: F.Column, seed: int) -> F.Column:
-    """A 60-bit hash both engines compute bit-identically: the first 15
-    hex chars of ``md5(col || ':' || seed)`` as a number. Spark side is
-    one ``conv(substring(md5(...)))``; DuckDB reproduces it by byte-
-    swapping ``md5_number_upper`` (little-endian first-8-bytes) and
-    dropping the low nibble — see ``_MINHASH_AUDIT_SQL`` in the driver.
-    60 bits keeps the value ANSI-safe in a signed BIGINT in both
-    engines."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(":", col, F.lit(seed))), 1, 15), 16, 10
-    ).cast("long")
-
-
-def _banded_auditable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k_shingle: int = 5,
-    n_hashes: int = 30,
-    bands: int = 5,
-) -> DataFrame:
-    """UNCAPPED ``(_id, band, bucket)`` LSH index rows on the auditable
-    md5 signature path: minhash_j(doc) = min over char-k-shingles of
-    :func:`_md5_hash60`, bucket = ':'-joined decimal strings of the
-    band's row hashes.  Shared by :func:`minhash_lsh_candidates_auditable`
-    (which caps + self-joins) and the streaming survivor-store index
-    (streaming/fuzzy_dedup_stream.py) so cross-batch lookups stay
-    bit-compatible with in-batch candidate generation — and externally
-    SQL-replayable."""
-    rows = n_hashes // bands
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(shingles(text_col, k_shingle)).alias("_g"),
-    ).select(
-        "_id",
-        *[_md5_hash60(F.col("_g"), j).alias(f"_h{j}") for j in range(n_hashes)],
-    )
-    sig = ex.groupBy("_id").agg(
-        *[F.min(f"_h{j}").alias(f"mh_{j}") for j in range(n_hashes)]
-    )
-    band_cols = [
-        F.concat_ws(
-            ":", *[F.col(f"mh_{b * rows + i}").cast("string") for i in range(rows)]
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "_id", F.posexplode(F.array(*band_cols)).alias("band", "bucket")
-    )
-
-
-def minhash_lsh_candidates_auditable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k_shingle: int = 5,
-    n_hashes: int = 30,
-    bands: int = 5,
-    bucket_cap: int | None = 1024,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash-LSH whose
-    signatures are **bit-identically replayable by an external SQL
-    engine** (the audit path): minhash_j(doc) = min over char-k-shingles
-    of a 60-bit md5-derived hash (:func:`_md5_hash60`), bands are
-    ':'-joined decimal strings of each band's row hashes. Same
-    (band, bucket) self-join + ``bucket_cap`` guard as the fast path.
-
-    This is what makes a FULL-CORPUS fuzzy-dedup flow hard-oracle
-    checkable without a quadratic all-pairs Jaccard on the oracle side
-    (the r6 sf0.1 skip): the oracle replays candidate generation
-    exactly, so verification only ever touches the same near-linear
-    candidate set in both engines — the SQL-exact-kernel playbook
-    (cf. ivf_ann_topk's replayed k-means).
-
-    Scale shape: explode to (doc, shingle) rows, compute the K hashes
-    per shingle JVM-side (whole-stage codegen, no Python), and take K
-    map-side-combinable ``min`` aggregates per doc — the shuffle after
-    partial aggregation is K longs per doc. The fast path
-    (:func:`minhash_lsh_candidates`, numpy rolling-hash signatures) is
-    ~2x cheaper per signature and remains the bench/production default;
-    both paths share banding, cap, join, and verify semantics."""
-    banded = _banded_auditable(
-        df, text_col=text_col, id_col=id_col,
-        k_shingle=k_shingle, n_hashes=n_hashes, bands=bands,
-    )
-    banded = _cap_buckets(banded, ["band", "bucket"], bucket_cap)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
+def _lsh_self_join(index: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """Cap ``index``'s buckets (:func:`_cap_buckets`), then equi-join it
+    with itself on ``keys`` with ``l._id < r._id``; the two sides are
+    aliased ``l`` and ``r``."""
+    index = _cap_buckets(index, keys, cap)
+    l, r = index.alias("l"), index.alias("r")
+    return l.join(
+        r,
+        [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        + [F.col("l._id") < F.col("r._id")],
     )
 
 
@@ -634,7 +547,7 @@ def fuzzy_dedup_pipeline(
     n_hashes: int = 30,
     bands: int = 5,
     bucket_cap: int | None = 1024,
-    signature: str = "auditable",
+    signature: str = "fast",
     max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -648,25 +561,24 @@ def fuzzy_dedup_pipeline(
     src/tersets.zig:887-888 round-trips compress→decompress rather than
     stopping at intermediate state).
 
-    ``signature='auditable'`` (default) uses the SQL-replayable md5
-    signatures so an external engine can reproduce the verified pair
-    set without quadratic work; ``'fast'`` uses the numpy rolling-hash
-    path (~2x cheaper signatures, bench/production default — identical
-    banding/cap/verify/CC semantics). ``stats`` (optional dict) gets
-    ``cc_rounds`` = star rounds until convergence.
+    ``signature`` accepts only ``'fast'``, the one signature path
+    (:func:`minhash_index`); any other value raises. ``stats``
+    (optional dict) gets ``cc_rounds`` = star rounds until convergence.
 
     Scale notes: the candidate cache is materialized before the verify
     join fans out (the r4/r5 AQE broadcast-build trap, measured 14-50 s
     vs 4-6 s); every downstream stage is the already-plan-audited
     operator (capped LSH join, pair-restricted shingle materialization,
     join-free star rounds with per-round localCheckpoint)."""
+    # the keyword stays only for perfbench/fuzzy_stream.py, which passes
+    # signature="fast"
+    if signature != "fast":
+        raise ValueError(
+            f"fuzzy_dedup_pipeline: unknown signature {signature!r}; the "
+            "only MinHash signature path is 'fast'"
+        )
     docs = df.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
-    make = (
-        minhash_lsh_candidates_auditable
-        if signature == "auditable"
-        else minhash_lsh_candidates
-    )
-    cands = make(
+    cands = minhash_lsh_candidates(
         docs,
         text_col=text_col,
         id_col="doc_id",
@@ -773,10 +685,8 @@ def simhash_near_dups(
         "sig_lo",
         F.shiftrightunsigned("sig_hi", 32 - prefix_bits).alias("bucket"),
     )
-    b = _cap_buckets(b, ["bucket"], bucket_cap)
-    l, r = b.alias("l"), b.alias("r")
     return (
-        l.join(r, (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l._id") < F.col("r._id")))
+        _lsh_self_join(b, ["bucket"], bucket_cap)
         .select(
             F.col("l._id").alias("id_a"),
             F.col("r._id").alias("id_b"),
@@ -835,8 +745,6 @@ def embedding_near_dups(
         )
     ).alias("bucket")
     b = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), bucket)
-    b = _cap_buckets(b, ["bucket"], bucket_cap)
-    l, r = b.alias("l"), b.alias("r")
     dot = F.aggregate(
         F.zip_with(F.col("l._v"), F.col("r._v"), lambda a, x: a * x),
         F.lit(0.0),
@@ -850,7 +758,7 @@ def embedding_near_dups(
         )
     )
     return (
-        l.join(r, (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l._id") < F.col("r._id")))
+        _lsh_self_join(b, ["bucket"], bucket_cap)
         .withColumn("cosine", dot / (norm("l") * norm("r")))
         .filter(F.col("cosine") >= threshold)
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"), "cosine")

@@ -50,7 +50,7 @@ verify, join-free CC) plus one equi-join of the batch's band buckets
 against the store index on (band, bucket) — candidate volume is
 near-linear in true cross-batch duplicates. The store only grows with
 SURVIVORS (near-dups are never inserted), so a bucket's population is
-bounded by distinct non-duplicate content sharing a 60-bit band
+bounded by distinct non-duplicate content sharing a 64-bit band
 bucket; ``verify_cap`` bounds the per-doc verify fan-out against
 adversarial boilerplate regardless. Writes are partitioned by
 micro-batch id and use dynamic partition overwrite, so a replayed
@@ -64,19 +64,16 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 from pyspark.sql.window import Window
 
 from tersets_spark.operators.dedup import (
     _CC_COLLECT_EDGES,
-    _band_buckets_batch,
-    _banded_auditable,
     connected_components,
     fuzzy_dedup_pipeline,
+    minhash_index,
     ngram_jaccard_pairs,
 )
 
@@ -89,44 +86,19 @@ __all__ = [
 ]
 
 
-def _banded(
-    docs: DataFrame,
-    k_shingle: int,
-    n_hashes: int,
-    bands: int,
-    seed: int,
-    signature: str = "fast",
-) -> DataFrame:
-    """(doc_id, band, bucket) LSH index rows for ``docs`` — the same
-    signature path the batch LSH join uses (``signature`` selects the
-    numpy rolling-hash default or the SQL-replayable md5 path), so
-    store lookups are bit-compatible with in-batch candidate
-    generation."""
-    if signature == "auditable":
-        return _banded_auditable(
-            docs, text_col="text", id_col="doc_id",
-            k_shingle=k_shingle, n_hashes=n_hashes, bands=bands,
-        ).withColumnRenamed("_id", "doc_id")
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_buckets(texts: pd.Series) -> pd.Series:
-        return _band_buckets_batch(texts, k_shingle, n_hashes, bands, seed)
-
-    # pure function; nondeterministic marker stops the optimizer from
-    # duplicating the evaluation around posexplode's pushed filter
-    # (guide §4.4 — see minhash_lsh_candidates)
-    band_buckets = band_buckets.asNondeterministic()
-
-    return docs.select(
-        "doc_id", band_buckets(F.col("text")).alias("_bb")
-    ).select("doc_id", F.posexplode("_bb").alias("band", "bucket"))
-
-
 def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
     try:
         return spark.read.option("basePath", path).parquet(path)
     except AnalysisException:
         return None  # store empty: first batch (or no partition yet)
+
+
+#: why a store is refused, and the way out: the full compaction reads no
+#: stored index and rewrites every one, so it brings such a store over
+_FOREIGN = (
+    "the store was written by an earlier MinHash signature path; run "
+    "recompact_fuzzy_store once, which re-bands every seen doc"
+)
 
 
 def process_fuzzy_batch(
@@ -142,7 +114,6 @@ def process_fuzzy_batch(
     bucket_cap: int | None = 1024,
     verify_cap: int = 256,
     seed: int = 42,
-    signature: str = "fast",
     keep_dropped_texts: bool = False,
 ) -> None:
     """Resolve ONE micro-batch against the survivor store (see module
@@ -162,6 +133,26 @@ def process_fuzzy_batch(
     :func:`fuzzy_dedup_stream`. Doc ids must be globally unique across
     the stream (standard for ingestion ids)."""
     spark = batch_df.sparkSession
+    # The store view is STRICTLY EARLIER batches: a foreachBatch replay
+    # of batch_id must not see its own first attempt's partitions (the
+    # batch's docs would self-match and be dropped), nor leftovers of a
+    # crashed later batch. batch ids are monotone in a stream, so
+    # `batch < batch_id` is exactly "committed history". Read before any
+    # work, so a store of another signature path fails cleanly: its
+    # string buckets would join against no bigint bucket and silently
+    # find no earlier survivor.
+    store_buckets = _read_store(spark, f"{store_path}/buckets")
+    if store_buckets is not None:
+        kind = dict(store_buckets.dtypes)["bucket"]
+        if kind != "bigint":
+            raise ValueError(
+                f"{store_path}/buckets holds {kind}, not bigint, buckets: {_FOREIGN}"
+            )
+        store_buckets = store_buckets.filter(F.col("batch") < int(batch_id))
+    # survivors are always written before buckets, but the stores can
+    # diverge under retention / manual cleanup — treat a missing
+    # survivors store like a missing bucket index: no committed history.
+    old_texts = _read_store(spark, f"{store_path}/survivors")
     docs = batch_df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -176,7 +167,6 @@ def process_fuzzy_batch(
         n_hashes=n_hashes,
         bands=bands,
         bucket_cap=bucket_cap,
-        signature=signature,
     )
     # Stage the two HEAVY sub-plan results once each (.tmp_batch-N is
     # dot-hidden like the staged partitions; swept after promote and by
@@ -198,23 +188,14 @@ def process_fuzzy_batch(
     )
 
     # 2) cross-batch: batch survivors' band buckets vs the store index.
-    banded = _banded(
-        batch_survivors, k_shingle, n_hashes, bands, seed, signature
-    ).persist()
+    banded = minhash_index(
+        batch_survivors, "text", "doc_id", k_shingle, n_hashes, bands, seed
+    ).withColumnRenamed("_id", "doc_id").persist()
     banded.count()  # materialize: read twice (history join + store append)
-    # The store view is STRICTLY EARLIER batches: a foreachBatch replay
-    # of batch_id must not see its own first attempt's partitions (the
-    # batch's docs would self-match and be dropped), nor leftovers of a
-    # crashed later batch. batch ids are monotone in a stream, so
-    # `batch < batch_id` is exactly "committed history".
-    store_buckets = _read_store(spark, f"{store_path}/buckets")
-    if store_buckets is not None:
-        store_buckets = store_buckets.filter(F.col("batch") < int(batch_id))
-    # survivors are always written before buckets, but the stores can
-    # diverge under retention / manual cleanup — treat a missing
-    # survivors store like a missing bucket index: no committed history.
-    old_texts = _read_store(spark, f"{store_path}/survivors")
-    matched = None
+    # no history: an empty match set. limit(0) lets the optimizer fold
+    # its joins away; a list-built frame alone is a Python-RDD scan it
+    # cannot see is empty
+    matched = spark.createDataFrame([], "doc_id long, matched long").limit(0)
     if store_buckets is not None and old_texts is not None:
         cand = (
             banded.alias("n")
@@ -256,19 +237,13 @@ def process_fuzzy_batch(
             f"{tmp_root}/matched",
         )
 
-    if matched is not None:
-        new_survivors = batch_survivors.join(
-            matched.select("doc_id"), "doc_id", "left_anti"
-        )
-    else:
-        new_survivors = batch_survivors
-
+    new_survivors = batch_survivors.join(
+        matched.select("doc_id"), "doc_id", "left_anti"
+    )
     decisions = (
         docs.select("doc_id")
         .join(dropped_in_batch.withColumn("_ib", F.lit(True)), "doc_id", "left")
-        .join(matched if matched is not None
-              else spark.createDataFrame([], "doc_id long, matched long"),
-              "doc_id", "left")
+        .join(matched, "doc_id", "left")
         .select(
             "doc_id",
             F.when(F.col("_ib"), F.lit("dup_in_batch"))
@@ -335,15 +310,18 @@ def fuzzy_dedup_stream(stream: DataFrame, store_path: str, **params):
     return stream.writeStream.foreachBatch(_proc)
 
 
+def _hpath(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FS API, so
+    the same code works on local disk, HDFS, or object stores."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
 def _delete_batch_partitions_below(
     spark: SparkSession, root: str, below: int
 ) -> None:
-    """Drop ``batch=N`` partition dirs with N < below (Hadoop FS API, so
-    the same code works on local disk, HDFS, or object stores)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hroot = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hroot.getFileSystem(hconf)
+    """Drop ``batch=N`` partition dirs with N < below."""
+    fs, hroot = _hpath(spark, root)
     if not fs.exists(hroot):
         return
     for st in fs.listStatus(hroot):
@@ -401,10 +379,7 @@ def _stage_df(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 
 
 def _delete_dir(spark: SparkSession, path: str) -> None:
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
+    fs, hpath = _hpath(spark, path)
     if fs.exists(hpath):
         fs.delete(hpath, True)
 
@@ -421,16 +396,9 @@ def _promote_staged(spark: SparkSession, root: str, batch_id: int) -> None:
     object stores rename is a copy; production should use a
     transactional table format for true atomic swap, as documented on
     :func:`recompact_fuzzy_store`."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(
-        f"{root}/.staged_batch-{int(batch_id)}"
-    )
-    dst = jvm.org.apache.hadoop.fs.Path(f"{root}/batch={int(batch_id)}")
-    aside = jvm.org.apache.hadoop.fs.Path(
-        f"{root}/.old_batch-{int(batch_id)}"
-    )
-    fs = src.getFileSystem(hconf)
+    fs, src = _hpath(spark, f"{root}/.staged_batch-{int(batch_id)}")
+    dst = _hpath(spark, f"{root}/batch={int(batch_id)}")[1]
+    aside = _hpath(spark, f"{root}/.old_batch-{int(batch_id)}")[1]
     if fs.exists(aside):  # leftover from a crash mid-promote
         fs.delete(aside, True)
     if fs.exists(dst):
@@ -455,18 +423,13 @@ def _delete_staged_dirs(
     intermediates of an in-flight LATER micro-batch running
     concurrently — ids above the compaction's own commit id are someone
     else's live state, not leftovers."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
     prefixes = [
         (s, p)
         for s in _STORE_SUBDIRS
         for p in (".staged_batch-", ".old_batch-")
     ] + [("", ".tmp_batch-")]
     for sub, prefix in prefixes:
-        hroot = jvm.org.apache.hadoop.fs.Path(
-            f"{store_path}/{sub}" if sub else store_path
-        )
-        fs = hroot.getFileSystem(hconf)
+        fs, hroot = _hpath(spark, f"{store_path}/{sub}" if sub else store_path)
         if not fs.exists(hroot):
             continue
         for st in fs.listStatus(hroot):
@@ -694,12 +657,17 @@ def _write_compacted_state(
     return out
 
 
-#: the parameter row ``meta/`` persists; the incremental pass replays it
+#: the parameter row ``meta/`` persists; the incremental pass replays
+#: the parameters and checks ``signature``: the MinHash signature the
+#: stored index was banded with, always ``_SIGNATURE`` here. A row with
+#: any other value came from an earlier signature path whose buckets no
+#: new doc can match, so the incremental pass refuses it.
 _META_SCHEMA = (
     "k_shingle int, threshold double, n_hashes int, bands int, "
     "bucket_cap bigint, seed bigint, signature string"
 )
-_PARAMS = tuple(f.split()[0] for f in _META_SCHEMA.split(", "))
+_PARAMS = tuple(f.split()[0] for f in _META_SCHEMA.split(", "))[:-1]
+_SIGNATURE = "fast"
 _EMPTY = {"compacted": False, "reason": "empty store"}
 
 
@@ -815,10 +783,14 @@ def _recompact(
         # n_bucket is the cap filter's count-over-window on the join key
         # itself: same shuffle key as the self-join, no extra exchange.
         # Cached before any fan-out read (the AQE lazy-cache trap).
-        banded = _banded(
-            new_texts, p["k_shingle"], p["n_hashes"], p["bands"], p["seed"],
-            p["signature"],
-        ).withColumn("n_bucket", F.count("*").over(Window.partitionBy(*keys)))
+        banded = (
+            minhash_index(
+                new_texts, "text", "doc_id",
+                p["k_shingle"], p["n_hashes"], p["bands"], p["seed"],
+            )
+            .withColumnRenamed("_id", "doc_id")
+            .withColumn("n_bucket", F.count("*").over(Window.partitionBy(*keys)))
+        )
         caches.append(banded.persist())
         banded.count()
         allbuckets = banded
@@ -892,7 +864,7 @@ def _recompact(
             )
         # one partition: one meta file, not one per default-parallelism slot
         meta_row = spark.createDataFrame(
-            [tuple(p[c] for c in _PARAMS)], _META_SCHEMA
+            [tuple(p[c] for c in _PARAMS) + (_SIGNATURE,)], _META_SCHEMA
         ).coalesce(1)
         # dropped/ is skipped only when a replayable corpus is the archive
         # AND the store never kept dropped texts; with corpus=None it is
@@ -927,7 +899,6 @@ def recompact_fuzzy_store(
     bands: int = 5,
     bucket_cap: int | None = 1024,
     seed: int = 42,
-    signature: str = "fast",
     max_iter: int = 25,
 ) -> dict:
     """Full re-resolution compaction of the streaming fuzzy-dedup store:
@@ -972,7 +943,7 @@ def recompact_fuzzy_store(
         "k_shingle": k_shingle, "threshold": float(threshold),
         "n_hashes": n_hashes, "bands": bands,
         "bucket_cap": None if bucket_cap is None else int(bucket_cap),
-        "seed": int(seed), "signature": signature,
+        "seed": int(seed),
     }
     dec = _read_store(spark, f"{store_path}/decisions")
     if dec is None or _read_store(spark, f"{store_path}/survivors") is None:
@@ -1047,6 +1018,10 @@ def recompact_fuzzy_store_incremental(
     if int(max_batch) <= c_last:
         return _nothing_new(spark, store_path, c_last)
     meta = next(r for r in f_meta.result() if int(r["batch"]) == c_last)
+    if meta["signature"] != _SIGNATURE:
+        raise ValueError(
+            f"{store_path}/meta records signature {meta['signature']!r}: {_FOREIGN}"
+        )
     prior = _Prior(
         int(max_batch),
         c_last,

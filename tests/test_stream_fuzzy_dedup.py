@@ -687,3 +687,87 @@ def test_recompact_crash_before_promotion_leaves_store_untouched(
             assert not [
                 d for d in os.listdir(root) if d.startswith(".staged_batch-")
             ]
+
+
+def _ints(values, type_: str = "int64"):
+    import pyarrow as pa
+
+    return pa.array(list(values), type=type_)
+
+
+def _write_partition(store: str, sub: str, batch: int, table: dict) -> None:
+    """Hand-write one ``{sub}/batch=N`` store partition (no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(store, sub, f"batch={batch}")
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(pa.table(table), os.path.join(d, "part-0.parquet"))
+
+
+def _md5_era_store(store: str) -> None:
+    """A one-batch store as the retired md5 signature path wrote it:
+    ``bucket`` is a ':'-joined decimal string."""
+    _write_partition(store, "survivors", 0, {
+        "doc_id": _ints([1]), "text": [G1],
+    })
+    _write_partition(store, "buckets", 0, {
+        "doc_id": _ints([1] * 5), "band": _ints(range(5), "int32"),
+        "bucket": [f"{b}1:{b}2:{b}3" for b in range(5)],
+    })
+    _write_partition(store, "decisions", 0, {
+        "doc_id": _ints([1]), "status": ["survivor"], "matched": _ints([None]),
+    })
+
+
+def test_string_bucket_store_is_refused_until_full_recompact(spark, tmp_path):
+    """A store whose buckets/ holds string buckets (the retired md5
+    path) would join against no bigint bucket and silently find no
+    earlier survivor: the next batch raises before writing anything.
+    The full compaction reads no stored index, so it re-bands the store
+    and the batch then matches its earlier survivor."""
+    from tersets_spark.streaming.fuzzy_dedup_stream import recompact_fuzzy_store
+
+    store = str(tmp_path / "store")
+    _md5_era_store(store)
+    df = spark.createDataFrame([(2, G1 + "!")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="not bigint"):
+        process_fuzzy_batch(df, store, batch_id=1, keep_dropped_texts=True)
+    assert sorted(os.listdir(store)) == ["buckets", "decisions", "survivors"]
+    assert sorted(os.listdir(f"{store}/decisions")) == ["batch=0"]
+
+    assert recompact_fuzzy_store(spark, store)["compacted"]
+    buckets = spark.read.parquet(f"{store}/buckets")
+    assert dict(buckets.dtypes)["bucket"] == "bigint"
+    process_fuzzy_batch(df, store, batch_id=1, keep_dropped_texts=True)
+    assert _decisions(spark, store)[2] == ("dup_of_earlier", 1)
+
+
+def test_auditable_meta_row_is_refused(spark, tmp_path):
+    """An incremental pass over a compaction whose meta/ row records a
+    signature other than 'fast' raises instead of banding new docs
+    against an index they cannot match."""
+    from tersets_spark.streaming.fuzzy_dedup_stream import (
+        recompact_fuzzy_store_incremental,
+    )
+
+    store = str(tmp_path / "store")
+    _md5_era_store(store)
+    _write_partition(store, "clusters", 0, {
+        "doc_id": _ints([1]), "cluster_id": _ints([1]),
+    })
+    _write_partition(store, "allbuckets", 0, {
+        "doc_id": _ints([1]), "band": _ints([0], "int32"),
+        "bucket": ["1:2:3"], "n_bucket": _ints([1]),
+    })
+    _write_partition(store, "meta", 0, {
+        "k_shingle": _ints([5], "int32"), "threshold": [0.5],
+        "n_hashes": _ints([30], "int32"), "bands": _ints([5], "int32"),
+        "bucket_cap": _ints([1024]), "seed": _ints([42]),
+        "signature": ["auditable"],
+    })
+    _write_partition(store, "decisions", 1, {
+        "doc_id": _ints([2]), "status": ["survivor"], "matched": _ints([None]),
+    })
+    with pytest.raises(ValueError, match="'auditable'"):
+        recompact_fuzzy_store_incremental(spark, store)

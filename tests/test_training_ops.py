@@ -4,6 +4,7 @@ language guess, latest-wins merge."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -358,43 +359,10 @@ def test_resolve_duplicate_groups_survivors(spark):
     assert rows[21].cluster_size == 2 and not rows[21].is_survivor
 
 
-def test_md5_hash60_matches_python(spark):
-    """The auditable signature hash must equal int(md5(s+':'+seed)
-    hexdigest[:15], 16) — the contract the DuckDB oracle's byte-swapped
-    md5_number_upper replay depends on."""
-    import hashlib
-
-    from tersets_spark.operators.dedup import _md5_hash60
-
-    df = spark.createDataFrame([("abc",), ("héllo",), ("",)], "s string")
-    got = {r.s: r.h for r in df.select("s", _md5_hash60(F.col("s"), 7).alias("h")).collect()}
-    for s in ("abc", "héllo", ""):
-        exp = int(hashlib.md5(f"{s}:7".encode()).hexdigest()[:15], 16)
-        assert got[s] == exp, s
-
-
-def test_auditable_candidates_find_planted_dups(spark):
-    """minhash_lsh_candidates_auditable catches planted near-identical
-    pairs and stays empty across unrelated docs."""
-    from tersets_spark.operators.dedup import minhash_lsh_candidates_auditable
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    rows = [
-        (1, base),
-        (2, base + " x"),          # near-identical to 1
-        (3, "completely different content about spark catalyst optimizer plans"),
-        (4, "unrelated text discussing parquet column pruning and predicate pushdown"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cands = {(r.id_a, r.id_b) for r in minhash_lsh_candidates_auditable(df).collect()}
-    assert (1, 2) in cands
-    assert all(p in {(1, 2)} or 3 not in p and 4 not in p for p in cands) or cands == {(1, 2)}
-
-
 def test_fuzzy_dedup_pipeline_end_to_end(spark):
     """Full production flow on a corpus with two planted dup groups:
-    survivors are the component minima, stats records CC rounds, and
-    the 'fast' (numpy) signature path resolves the same groups."""
+    survivors are the component minima, stats records CC rounds, and a
+    signature other than 'fast' is refused."""
     from tersets_spark.operators.dedup import fuzzy_dedup_pipeline
 
     g1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
@@ -405,17 +373,16 @@ def test_fuzzy_dedup_pipeline_end_to_end(spark):
         (30, "totally unrelated document content about bitpacked delta encoding"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for signature in ("auditable", "fast"):
-        stats: dict = {}
-        out = {r.doc_id: r for r in fuzzy_dedup_pipeline(
-            df, signature=signature, stats=stats
-        ).collect()}
-        assert set(out) == {10, 11, 12, 20, 21}, signature
-        assert all(out[d].cluster_id == 10 for d in (10, 11, 12))
-        assert all(out[d].cluster_id == 20 for d in (20, 21))
-        assert out[10].is_survivor and out[20].is_survivor
-        assert not out[11].is_survivor and not out[21].is_survivor
-        # small verified-pair graphs opt into the driver union-find
-        # fast path (cc_rounds == 0); the distributed star rounds are
-        # pinned by the connected_components tests below
-        assert stats["cc_rounds"] == 0, signature
+    stats: dict = {}
+    out = {r.doc_id: r for r in fuzzy_dedup_pipeline(df, stats=stats).collect()}
+    assert set(out) == {10, 11, 12, 20, 21}
+    assert all(out[d].cluster_id == 10 for d in (10, 11, 12))
+    assert all(out[d].cluster_id == 20 for d in (20, 21))
+    assert out[10].is_survivor and out[20].is_survivor
+    assert not out[11].is_survivor and not out[21].is_survivor
+    # small verified-pair graphs opt into the driver union-find
+    # fast path (cc_rounds == 0); the distributed star rounds are
+    # pinned by the connected_components tests below
+    assert stats["cc_rounds"] == 0
+    with pytest.raises(ValueError, match="signature"):
+        fuzzy_dedup_pipeline(df, signature="auditable")

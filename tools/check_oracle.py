@@ -2,14 +2,12 @@
 via Spark and its ``oracle_sql()`` via DuckDB on the same parquet
 tables; compare row count, column names, and order-insensitive values.
 
-Usage: python tools/check_oracle.py [sf_dir] [query ...]
-       [--extras] [--skip-quadratic-oracles]
+Usage: python tools/check_oracle.py [sf_dir] [query ...] [--extras]
 
-``--skip-quadratic-oracles`` skips the queries whose DUCKDB ORACLE is
-inherently quadratic (exact all-pairs Jaccard behind
-``minhash_jaccard_dups``) and cannot finish above ~sf0.01 — the ENGINE
-side is banded LSH and scales fine; the oracle is the limit. With the
-flag, the sf0.1 sweep runs clean end-to-end (round-4 verdict #9).
+``--extras`` adds the per-method debug rows behind the consolidated
+catalog gates (naming one ``x_`` row selects it alone). No row is
+skipped at any scale: ``minhash_jaccard_dups``'s oracle replays the
+engine's LSH candidates instead of scoring all pairs.
 """
 
 from __future__ import annotations
@@ -67,16 +65,11 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
-#: queries whose ORACLE (not engine) is all-pairs quadratic
-QUADRATIC_ORACLES = {"minhash_jaccard_dups"}
-
-
 def main() -> int:
     flags = {a for a in sys.argv[1:] if a.startswith("--")}
     argv = [a for a in sys.argv[1:] if not a.startswith("--")]
     extras = "--extras" in flags
-    skip_quadratic = "--skip-quadratic-oracles" in flags
-    unknown = flags - {"--extras", "--skip-quadratic-oracles"}
+    unknown = flags - {"--extras"}
     if unknown:
         print(f"unknown flags: {sorted(unknown)}")
         return 2
@@ -102,9 +95,6 @@ def main() -> int:
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
-            continue
-        if skip_quadratic and name in QUADRATIC_ORACLES:
-            print(f"SKIP {name}: quadratic oracle (engine is banded LSH; green at sf0.01)")
             continue
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()

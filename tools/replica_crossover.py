@@ -71,18 +71,18 @@ def main() -> None:
             for b in range(3):
                 process_fuzzy_batch(
                     docs.filter(F.col("doc_id") % 4 == b), tmp, b,
-                    signature="fast", keep_dropped_texts=True,
+                    keep_dropped_texts=True,
                 )
-            recompact_fuzzy_store(spark, tmp, signature="fast")
+            recompact_fuzzy_store(spark, tmp)
             process_fuzzy_batch(
                 docs.filter(F.col("doc_id") % 4 == 3), tmp, 3,
-                signature="fast", keep_dropped_texts=True,
+                keep_dropped_texts=True,
             )
             t0 = time.time()
             r_inc = recompact_fuzzy_store_incremental(spark, tmp)
             t_inc = time.time() - t0
             t0 = time.time()
-            recompact_fuzzy_store(spark, tmp, signature="fast")
+            recompact_fuzzy_store(spark, tmp)
             t_full = time.time() - t0
             print(
                 f"mult={mult} n_docs={n} incr={t_inc:.2f}s "
