@@ -501,18 +501,14 @@ def _tier_rollup_tokens_oracle(width: int, tokens_expr: str) -> str:
 
 def _fused_tier_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FUSED single-pass pipeline (mapInArrow compress + verify +
-    rollup partials, all tiers in one ROLLUP exchange — the flagship
-    bench path) gated by the same oracle as the unfused chars rollup:
-    identical tier rows must fall out of the fused partials."""
+    every tier's partials in one crossing — the flagship bench path)
+    gated by the same oracle as the unfused chars rollup: identical tier
+    rows must fall out of the fused partials."""
     _prep(spark)
-    from tersets_spark.operators.pipeline import (
-        fused_compress_rollup,
-        tier_rollups_fused,
-    )
+    from tersets_spark.operators.pipeline import fused_compress_rollup, tier_from_fused
 
     fused = fused_compress_rollup(_char_tokens(spark, sf_dir))
-    tiers = tier_rollups_fused(fused)
-    return tiers.filter(F.col("tier") == "1m").select(
+    return tier_from_fused(fused, "1m").select(
         "doc_id",
         "bucket",
         "vmin",

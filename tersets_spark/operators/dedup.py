@@ -104,6 +104,10 @@ def _band_buckets_batch(
     return pd.Series(out)
 
 
+#: the MinHash hash family every band uses unless a caller picks another
+MINHASH_SEED = 42
+
+
 def minhash_index(
     df: DataFrame,
     text_col: str,
@@ -111,7 +115,7 @@ def minhash_index(
     k_shingle: int,
     n_hashes: int,
     bands: int,
-    seed: int,
+    seed: int = MINHASH_SEED,
 ) -> DataFrame:
     """UNCAPPED ``(_id, band, bucket)`` MinHash-LSH index rows: one
     vectorized pandas UDF pass (:func:`_band_buckets_batch`) per doc,
@@ -143,7 +147,7 @@ def minhash_lsh_candidates(
     k_shingle: int = 5,
     n_hashes: int = 32,
     bands: int = 8,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     bucket_cap: int | None = 1024,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH:

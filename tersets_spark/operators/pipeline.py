@@ -1,24 +1,34 @@
-"""Fused single-pass operator: compress + round-trip verify + base-tier
-rollup partials in ONE Arrow crossing.
+"""Fused single-pass operator: compress + round-trip verify + every
+rollup tier's partials in ONE Arrow crossing.
 
 Scale rationale: at 10^12 sequences the dominant cost is moving token
 arrays into Python workers. The separate operators each pay that
 transfer (compress pass, rollup pass) and a naive verify pays it twice
 more (decompress + reassembly shuffle). This kernel reads each chunk
-once and emits everything derived from it:
+once and emits everything derived from it, one row per chunk:
 
   (doc_id, chunk_id, first_pos, n_values, blob, bytes, roundtrip_ok,
-   bucket0, bmin[], bmax[], bsum[], bcount[])
+   vmin_<t>[], vmax_<t>[], vsum_<t>[], vcount_<t>[] for t in TIERS)
+
+Invariant: one input row is one WHOLE document (TerseTS's model: a
+series is one array whose index is its clock). Every bucket of every
+tier therefore lies inside one kernel call, so the kernel finishes the
+tiers itself and no downstream step merges partials:
 
 * ``roundtrip_ok`` verifies decompress(compress(chunk)) == chunk
-  in-kernel — no decode job, no reassembly shuffle. Chunk-exact implies
-  doc-exact because chunk boundaries are deterministic.
-* the rollup partial arrays cover the global base-tier buckets touched
-  by the chunk (buckets straddling chunk boundaries yield two partials
-  merged exactly by the downstream groupBy since min/max/sum/count are
-  all reassociable).
-* downstream: blocks table = projection; base rollup = JVM-side explode
-  + groupBy; coarser tiers re-aggregate the base (operators.rollup).
+  in-kernel, bit for bit — no decode job, no reassembly shuffle.
+  Chunk-exact implies doc-exact because chunk boundaries are
+  deterministic.
+* the doc's complete rollup rows of every tier in ``rollup.TIERS`` ride
+  on its chunk-0 row (other chunks carry empty lists); array index =
+  bucket. The finest tier reduces the tokens, each coarser tier the
+  next-finer tier's partials (the widths nest).
+* downstream: blocks table = projection; a tier table = one explode
+  (:func:`tier_from_fused`); the flagship = one global aggregate
+  (:func:`flagship_summary`). None of them shuffles by key.
+
+Duplicate ``doc_id`` rows are not merged (rejecting them needs a
+shuffle); they yield one set of tier rows each.
 """
 
 from __future__ import annotations
@@ -26,21 +36,112 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import registry
+from ..kernels.batch import compress_batch, decompress_batch
+from ..kernels.bitstream import segment_intra_indices
 from ..methods import Method
-from .compress import CHUNK, chunk_tokens
+from .compress import CHUNK
+from .rollup import TIERS
 
-FUSED_SCHEMA = (
+#: tier names, finest first
+_TIER_NAMES = sorted(TIERS, key=TIERS.get)
+_STATS = ("vmin", "vmax", "vsum", "vcount")
+_CHUNK_FIELDS = (
     "doc_id string, chunk_id int, first_pos long, n_values int, "
-    "blob binary, bytes int, roundtrip_ok boolean, bucket0 long, "
-    "bmin array<double>, bmax array<double>, bsum array<double>, "
-    "bcount array<long>"
+    "blob binary, bytes int, roundtrip_ok boolean"
 )
+FUSED_SCHEMA = ", ".join(
+    [_CHUNK_FIELDS]
+    + [
+        f"{s}_{t} array<{'long' if s == 'vcount' else 'double'}>"
+        for t in _TIER_NAMES
+        for s in _STATS
+    ]
+)
+_NAMES = [f.split()[0] for f in FUSED_SCHEMA.split(", ")]
+
+
+def _tiers(fflat: np.ndarray, row_off: np.ndarray) -> list[tuple[np.ndarray, list]]:
+    """Per tier (finest first): the per-doc offsets into its partials
+    and the partials ``[vmin, vmax, vsum, vcount]``, doc after doc.
+
+    A tier's buckets tile its source (tokens, then the next-finer
+    tier's partials) with no gap, so ``reduceat`` over the bucket
+    starts reduces each bucket exactly."""
+    out = []
+    src, off, prev_w = [fflat] * 3 + [None], row_off, 1
+    for name in _TIER_NAMES:
+        step = TIERS[name] // prev_w
+        n = (np.diff(off) + step - 1) // step
+        starts = np.repeat(off[:-1], n) + segment_intra_indices(n) * step
+        part = [
+            np.minimum.reduceat(src[0], starts),
+            np.maximum.reduceat(src[1], starts),
+            np.add.reduceat(src[2], starts),
+            np.diff(starts, append=fflat.size)
+            if src[3] is None
+            else np.add.reduceat(src[3], starts),
+        ]
+        off = np.concatenate(([0], np.cumsum(n)))
+        out.append((off, part))
+        src, prev_w = part, TIERS[name]
+    return out
+
+
+def _fused_batch(
+    batch: pa.RecordBatch, m: Method, cfg: dict, chunk: int
+) -> pa.RecordBatch:
+    """The kernel on one ``(doc_id, tokens)`` Arrow batch: FUSED_SCHEMA
+    rows, one per chunk (an empty doc has one empty chunk)."""
+    doc_col, tok_col = batch.column(0), batch.column(1)
+    if tok_col.null_count:
+        row = int(np.flatnonzero(tok_col.is_null().to_numpy(zero_copy_only=False))[0])
+        raise ValueError(f"null tokens for doc_id {doc_col[row].as_py()!r}")
+    lens = np.asarray(pc.list_value_length(tok_col), dtype=np.int64)
+    fflat = tok_col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    row_off = np.concatenate(([0], np.cumsum(lens)))
+    # --- per-chunk compression + in-kernel round-trip verify ---
+    n_chunks = np.maximum((lens + chunk - 1) // chunk, 1)
+    intra_c = segment_intra_indices(n_chunks)
+    rows_of_chunk = np.repeat(np.arange(batch.num_rows), n_chunks)
+    c_starts = row_off[:-1][rows_of_chunk] + intra_c * chunk
+    n_values = np.minimum(c_starts + chunk, row_off[1:][rows_of_chunk]) - c_starts
+    blobs = compress_batch(fflat, np.append(c_starts, fflat.size), m, cfg)
+    rt_flat, rt_off = decompress_batch(blobs)
+    rt_len = np.diff(rt_off)
+    ok = rt_len == n_values
+    src, dst = fflat, rt_flat
+    if not ok.all():  # compare only the chunks that decoded to the right length
+        src, dst = fflat[np.repeat(ok, n_values)], rt_flat[np.repeat(ok, rt_len)]
+    bad = np.flatnonzero(src.view(np.uint64) != dst.view(np.uint64))
+    kept = np.flatnonzero(ok)
+    kept_starts = np.cumsum(n_values[kept]) - n_values[kept]
+    ok[kept[np.searchsorted(kept_starts, bad, side="right") - 1]] = False
+    # a doc's tier partials ride on its chunk-0 row: a later chunk's list
+    # starts (and ends) at the doc's end offset
+    list_row = np.append(rows_of_chunk + (intra_c > 0), batch.num_rows)
+    tier_cols = [
+        pa.ListArray.from_arrays(off[list_row], pa.array(p))
+        for off, part in _tiers(fflat, row_off)
+        for p in part
+    ]
+    return pa.RecordBatch.from_arrays(
+        [
+            doc_col.take(pa.array(rows_of_chunk)),
+            pa.array(intra_c.astype(np.int32)),
+            pa.array(intra_c * chunk),
+            pa.array(n_values.astype(np.int32)),
+            pa.array(blobs, type=pa.binary()),
+            pa.array([len(b) for b in blobs], type=pa.int32()),
+            pa.array(ok),
+            *tier_cols,
+        ],
+        names=_NAMES,
+    )
 
 
 def fused_compress_rollup(
@@ -48,270 +149,78 @@ def fused_compress_rollup(
     method: Method = Method.BitPackedDeltaEncoding,
     config: dict | None = None,
     chunk: int = CHUNK,
-    base_width: int = 60,
 ) -> DataFrame:
     """One pass over ``(doc_id, tokens)``: returns the FUSED_SCHEMA
     DataFrame. Persist it if you consume more than one branch.
 
     Implemented with ``mapInArrow`` and flat-buffer access: the Arrow
-    ListArray's values buffer converts to ONE numpy array per batch
-    (zero-copy), per-doc/per-chunk views are numpy slices, and the
-    rollup partials come from batched ``reduceat`` over the flat buffer
-    — the Arrow->pandas list-column conversion (measured at >50% of the
-    pass) is skipped entirely. Chunking happens in-kernel at the same
-    deterministic CHUNK boundaries as operators.compress."""
+    ListArray's values buffer converts to ONE numpy array per batch,
+    per-chunk views are offsets into it, compression and the verify
+    decode are the batch codecs (``kernels.batch``, which fall back per
+    row for methods without a batch codec or with a ``config``), and the
+    tier partials come from batched ``reduceat`` — the Arrow->pandas
+    list-column conversion (measured at >50% of the pass) is skipped
+    entirely. Chunking happens in-kernel at the same deterministic CHUNK
+    boundaries as operators.compress. A null ``tokens`` row raises
+    ``ValueError`` naming its ``doc_id``."""
     method_code = int(method)
     cfg = dict(config or {})
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         m = Method(method_code)
         for batch in batches:
-            nrows = batch.num_rows
-            if not nrows:
-                continue
-            doc_col = batch.column(0)
-            tok_col = batch.column(1)
-            lens = np.asarray(
-                pa.compute.list_value_length(tok_col).to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            )
-            flat = tok_col.flatten().to_numpy(zero_copy_only=False)
-            fflat = flat.astype(np.float64)
-            row_off = np.concatenate(([0], np.cumsum(lens)))
-            # --- rollup partials for the whole batch in 3 reduceats ---
-            n_buckets = np.maximum((lens + base_width - 1) // base_width, 0)
-            intra = (
-                np.arange(int(n_buckets.sum()), dtype=np.int64)
-                - np.repeat(np.cumsum(n_buckets) - n_buckets, n_buckets)
-            )
-            bstarts = np.repeat(row_off[:-1], n_buckets) + intra * base_width
-            if bstarts.size:
-                pmin = np.minimum.reduceat(fflat, bstarts)
-                pmax = np.maximum.reduceat(fflat, bstarts)
-                psum = np.add.reduceat(fflat, bstarts)
-                bends = np.minimum(
-                    bstarts + base_width, np.repeat(row_off[1:], n_buckets)
-                )
-                pcount = bends - bstarts
-            else:
-                pmin = pmax = psum = np.empty(0, dtype=np.float64)
-                pcount = np.empty(0, dtype=np.int64)
-            part_off = np.concatenate(([0], np.cumsum(n_buckets)))
-            # --- per-chunk compression + in-kernel round-trip verify ---
-            n_chunks = np.maximum((lens + chunk - 1) // chunk, 1)
-            intra_c = (
-                np.arange(int(n_chunks.sum()), dtype=np.int64)
-                - np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
-            )
-            rows_of_chunk = np.repeat(np.arange(nrows), n_chunks)
-            c_starts = row_off[:-1][rows_of_chunk] + intra_c * chunk
-            c_ends = np.minimum(c_starts + chunk, row_off[1:][rows_of_chunk])
-            chunk_off = np.concatenate((c_starts, [fflat.size]))
-            if m in (Method.BitPackedDeltaEncoding, Method.Chimp64) and not cfg:
-                from ..kernels.batch import compress_batch, decompress_batch
-
-                blobs = compress_batch(fflat, chunk_off, m)
-                rt_flat, rt_off = decompress_batch(blobs)
-                eq = (
-                    rt_flat.view(np.uint64) == fflat.view(np.uint64)
-                    if rt_flat.size == fflat.size
-                    else np.zeros(1, dtype=bool)
-                )
-                if rt_flat.size == fflat.size and eq.size:
-                    safe = np.minimum(c_starts, max(eq.size - 1, 0))
-                    oks_arr = np.minimum.reduceat(eq, safe) | (c_ends == c_starts)
-                else:
-                    oks_arr = np.zeros(c_starts.size, dtype=bool)
-                oks = oks_arr.tolist()
-            else:
-                blobs, oks = [], []
-                for s, e in zip(c_starts, c_ends):
-                    v = fflat[s:e]
-                    blob = registry.compress(v, m, cfg)
-                    out = registry.decompress(blob)
-                    oks.append(out.size == v.size and bool(np.array_equal(out, v)))
-                    blobs.append(blob)
-            doc_ids = doc_col.take(pa.array(rows_of_chunk))
-            chunk_ids = intra_c
-            first_pos = intra_c * chunk
-            n_values = c_ends - c_starts
-            n_out = len(blobs)
-            rows_arr = rows_of_chunk
-            # partials ride on chunk 0 of each row; other chunks carry
-            # empty lists (a doc is never split across input rows)
-            is_first = chunk_ids == 0
-            out_counts = np.where(is_first, n_buckets[rows_arr], 0)
-            out_off = np.concatenate(([0], np.cumsum(out_counts))).astype(np.int64)
-            from ..kernels.bitstream import segment_intra_indices
-
-            take = np.repeat(part_off[:-1][rows_arr], out_counts) + (
-                segment_intra_indices(out_counts)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(chunk_ids.astype(np.int32)),
-                    pa.array(first_pos.astype(np.int64)),
-                    pa.array(n_values.astype(np.int32)),
-                    pa.array(blobs, type=pa.binary()),
-                    pa.array([len(b) for b in blobs], type=pa.int32()),
-                    pa.array(oks, type=pa.bool_()),
-                    # partials are doc-local (start at position 0), so the
-                    # carrying row's bucket0 is always 0
-                    pa.array(np.zeros(n_out, dtype=np.int64)),
-                    pa.ListArray.from_arrays(out_off, pa.array(pmin[take], type=pa.float64())),
-                    pa.ListArray.from_arrays(out_off, pa.array(pmax[take], type=pa.float64())),
-                    pa.ListArray.from_arrays(out_off, pa.array(psum[take], type=pa.float64())),
-                    pa.ListArray.from_arrays(out_off, pa.array(pcount[take], type=pa.int64())),
-                ],
-                names=[
-                    "doc_id",
-                    "chunk_id",
-                    "first_pos",
-                    "n_values",
-                    "blob",
-                    "bytes",
-                    "roundtrip_ok",
-                    "bucket0",
-                    "bmin",
-                    "bmax",
-                    "bsum",
-                    "bcount",
-                ],
-            )
+            if batch.num_rows:
+                yield _fused_batch(batch, m, cfg, chunk)
 
     return df.select("doc_id", "tokens").mapInArrow(kernel, schema=FUSED_SCHEMA)
 
 
-def base_rollup_from_fused(fused: DataFrame) -> DataFrame:
-    """Merge the chunk partials into the base-tier rollup:
-    (doc_id, bucket, vmin, vmax, vsum, vcount) — exact across chunk
-    boundaries."""
-    exploded = fused.select(
-        "doc_id",
-        F.posexplode(F.arrays_zip("bmin", "bmax", "bsum", "bcount")).alias("i", "z"),
-        "bucket0",
+def tier_from_fused(fused: DataFrame, tier: str) -> DataFrame:
+    """One rollup tier, ``(doc_id, bucket, vmin, vmax, vsum, vcount)``:
+    the tier's partial arrays exploded, one row per bucket. The partials
+    are already whole per doc, so nothing is grouped or shuffled."""
+    cols = [f"{s}_{tier}" for s in _STATS]
+    return fused.select(
+        "doc_id", F.posexplode(F.arrays_zip(*cols)).alias("bucket", "z")
     ).select(
         "doc_id",
-        (F.col("bucket0") + F.col("i")).alias("bucket"),
-        F.col("z.bmin").alias("pmin"),
-        F.col("z.bmax").alias("pmax"),
-        F.col("z.bsum").alias("psum"),
-        F.col("z.bcount").alias("pcount"),
-    )
-    return exploded.groupBy("doc_id", "bucket").agg(
-        F.min("pmin").alias("vmin"),
-        F.max("pmax").alias("vmax"),
-        F.sum("psum").alias("vsum"),
-        F.sum("pcount").alias("vcount"),
+        F.col("bucket").cast("long").alias("bucket"),
+        *[F.col(f"z.{c}").alias(s) for c, s in zip(cols, _STATS)],
     )
 
 
-def flagship_summary(
-    fused: DataFrame, widths: tuple[int, int, int] = (60, 3600, 86400)
-) -> DataFrame:
-    """ONE-action flagship: tier row counts + verify/bytes totals from a
-    single job. The chunk-level scalars (ok, bytes) ride the explode on
-    the first partial row only, so the ROLLUP's aggregates stay exact;
-    the grand-total grouping row carries the global verification verdict
-    and compressed size; tier levels carry row counts."""
-    w1, w2, w3 = widths
-    # posexplode_OUTER: non-first chunks carry no partials but must still
-    # contribute their verify flag and byte count (one null-bucket row)
-    exploded = fused.select(
-        "doc_id",
-        F.posexplode_outer(F.arrays_zip("bmin", "bmax", "bsum", "bcount")).alias(
-            "i", "z"
-        ),
-        "bucket0",
-        "bytes",
-        "n_values",
-        F.col("roundtrip_ok").cast("int").alias("ok_int"),
-    ).select(
-        "doc_id",
-        (F.col("bucket0") + F.col("i")).alias("b_fine"),
-        F.col("z.bmin").alias("pmin"),
-        F.col("z.bmax").alias("pmax"),
-        F.col("z.bsum").alias("psum"),
-        F.col("z.bcount").alias("pcount"),
-        F.when((F.col("i") == 0) | F.col("i").isNull(), F.col("bytes"))
-        .otherwise(0)
-        .alias("bytes0"),
-        F.when((F.col("i") == 0) | F.col("i").isNull(), F.col("n_values"))
-        .otherwise(0)
-        .alias("nv0"),
-        "ok_int",
-    )
-    lv = exploded.withColumn("b_mid", F.floor(F.col("b_fine") / (w2 // w1))).withColumn(
-        "b_coarse", F.floor(F.col("b_fine") / (w3 // w1))
-    )
-    agged = lv.rollup("doc_id", "b_coarse", "b_mid", "b_fine").agg(
-        F.grouping_id().alias("gid"),
-        F.sum("pcount").alias("vcount"),
-        F.sum("bytes0").alias("bytes"),
-        F.sum("nv0").alias("n_values"),
-        F.min("ok_int").alias("all_ok"),
-    )
-    return agged.filter((F.col("gid") <= 3) | (F.col("gid") == 15)).groupBy("gid").agg(
-        F.sum(F.when(F.col("vcount").isNotNull(), 1).otherwise(0)).alias("rows"),
-        F.min("all_ok").alias("all_ok"),
+def flagship_summary(fused: DataFrame) -> DataFrame:
+    """ONE-action flagship from one global aggregate (no key shuffle):
+    rows ``(gid, rows, all_ok, bytes, n_values)``. ``gid`` keeps the
+    grouping ids of ``ROLLUP(doc_id, 1d, 1h, 1m)``: 0, 1 and 3 carry
+    the 1m, 1h and 1d row counts; 15, the grand total, carries 1 when
+    any tier row exists. Every row carries the global verify verdict,
+    compressed bytes and token count. Empty input gives no rows."""
+    n = len(_TIER_NAMES)
+    totals = fused.agg(
+        F.count("*").alias("chunks"),
+        F.min(F.col("roundtrip_ok").cast("int")).alias("all_ok"),
         F.sum("bytes").alias("bytes"),
         F.sum("n_values").alias("n_values"),
+        *[F.sum(F.size(f"vcount_{t}")).alias(f"rows{i}") for i, t in enumerate(_TIER_NAMES)],
     )
-
-
-def tier_rollups_fused(
-    fused: DataFrame, widths: tuple[int, int, int] = (60, 3600, 86400)
-) -> DataFrame:
-    """All three tiers in ONE shuffle via ROLLUP grouping sets.
-
-    The chunk partials explode to base buckets, then
-    ``rollup(doc_id, b_coarse, b_mid, b_fine)`` aggregates every tier
-    level in a single exchange (map-side partial agg collapses each
-    grouping set before the shuffle). Output: ``tier`` in
-    {'1m','1h','1d'} + (doc_id, bucket, vmin, vmax, vsum, vcount);
-    the per-doc and grand-total grouping levels are filtered out."""
-    w1, w2, w3 = widths
-    exploded = fused.select(
-        "doc_id",
-        F.posexplode(F.arrays_zip("bmin", "bmax", "bsum", "bcount")).alias("i", "z"),
-        "bucket0",
-    ).select(
-        "doc_id",
-        (F.col("bucket0") + F.col("i")).alias("b_fine"),
-        F.col("z.bmin").alias("pmin"),
-        F.col("z.bmax").alias("pmax"),
-        F.col("z.bsum").alias("psum"),
-        F.col("z.bcount").alias("pcount"),
-    )
-    lv = exploded.withColumn("b_mid", F.floor(F.col("b_fine") / (w2 // w1))).withColumn(
-        "b_coarse", F.floor(F.col("b_fine") / (w3 // w1))
-    )
-    agged = (
-        lv.rollup("doc_id", "b_coarse", "b_mid", "b_fine")
-        .agg(
-            F.min("pmin").alias("vmin"),
-            F.max("pmax").alias("vmax"),
-            F.sum("psum").alias("vsum"),
-            F.sum("pcount").alias("vcount"),
-            F.grouping_id().alias("gid"),
+    gids = [((1 << i) - 1, F.col(f"rows{i}")) for i in range(n)]
+    gids.append(((2 << n) - 1, (F.col("rows0") > 0).cast("long")))
+    return totals.filter(F.col("chunks") > 0).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(gid).cast("long").alias("gid"),
+                        rows.alias("rows"),
+                        "all_ok",
+                        "bytes",
+                        "n_values",
+                    )
+                    for gid, rows in gids
+                ]
+            )
         )
-    )
-    return agged.filter(F.col("gid") <= 3).select(
-        F.when(F.col("gid") == 0, F.lit("1m"))
-        .when(F.col("gid") == 1, F.lit("1h"))
-        .otherwise(F.lit("1d"))
-        .alias("tier"),
-        "doc_id",
-        F.coalesce(
-            F.when(F.col("gid") == 0, F.col("b_fine")),
-            F.when(F.col("gid") == 1, F.col("b_mid")),
-            F.col("b_coarse"),
-        ).alias("bucket"),
-        "vmin",
-        "vmax",
-        "vsum",
-        "vcount",
     )
 
 

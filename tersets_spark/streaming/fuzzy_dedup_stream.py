@@ -71,6 +71,7 @@ from pyspark.sql.window import Window
 
 from tersets_spark.operators.dedup import (
     _CC_COLLECT_EDGES,
+    MINHASH_SEED,
     connected_components,
     fuzzy_dedup_pipeline,
     minhash_index,
@@ -113,7 +114,6 @@ def process_fuzzy_batch(
     bands: int = 5,
     bucket_cap: int | None = 1024,
     verify_cap: int = 256,
-    seed: int = 42,
     keep_dropped_texts: bool = False,
 ) -> None:
     """Resolve ONE micro-batch against the survivor store (see module
@@ -189,7 +189,7 @@ def process_fuzzy_batch(
 
     # 2) cross-batch: batch survivors' band buckets vs the store index.
     banded = minhash_index(
-        batch_survivors, "text", "doc_id", k_shingle, n_hashes, bands, seed
+        batch_survivors, "text", "doc_id", k_shingle, n_hashes, bands
     ).withColumnRenamed("_id", "doc_id").persist()
     banded.count()  # materialize: read twice (history join + store append)
     # no history: an empty match set. limit(0) lets the optimizer fold
@@ -898,7 +898,6 @@ def recompact_fuzzy_store(
     n_hashes: int = 30,
     bands: int = 5,
     bucket_cap: int | None = 1024,
-    seed: int = 42,
     max_iter: int = 25,
 ) -> dict:
     """Full re-resolution compaction of the streaming fuzzy-dedup store:
@@ -943,7 +942,7 @@ def recompact_fuzzy_store(
         "k_shingle": k_shingle, "threshold": float(threshold),
         "n_hashes": n_hashes, "bands": bands,
         "bucket_cap": None if bucket_cap is None else int(bucket_cap),
-        "seed": int(seed),
+        "seed": MINHASH_SEED,
     }
     dec = _read_store(spark, f"{store_path}/decisions")
     if dec is None or _read_store(spark, f"{store_path}/survivors") is None:

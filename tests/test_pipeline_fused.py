@@ -3,45 +3,137 @@ compress / rollup operators."""
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from tersets_spark.methods import Method
+from tersets_spark.operators.compress import compress_blocks, decompress_blocks, reassemble
 from tersets_spark.operators.pipeline import (
-    base_rollup_from_fused,
+    _fused_batch,
     blocks_from_fused,
+    flagship_summary,
     fused_compress_rollup,
+    tier_from_fused,
 )
-from tersets_spark.operators.compress import decompress_blocks, reassemble
-from tersets_spark.operators.rollup import rollup_tokens_base
+from tersets_spark.operators.rollup import TIERS, tier_rollups
 from tersets_spark.sources.synth import synth_tokens
+
+TOKENS = "doc_id string, tokens array<int>"
+
+
+def _edge_docs(spark):
+    """An empty doc, one shorter than a 1m bucket and one longer than a
+    1d bucket, next to the synthetic table."""
+    rng = np.random.default_rng(7)
+    edge = spark.createDataFrame(
+        [
+            ("edge_empty", []),
+            ("edge_short", rng.integers(0, 50_000, 37).tolist()),
+            ("edge_long", rng.integers(0, 131_072, 90_001).tolist()),
+        ],
+        TOKENS,
+    )
+    return synth_tokens(spark, 40, max_len=9000).select("doc_id", "tokens").unionByName(edge)
 
 
 def test_fused_matches_separate_operators(spark):
-    toks = synth_tokens(spark, 40, max_len=9000).persist()
+    toks = _edge_docs(spark).persist()
     fused = fused_compress_rollup(toks, Method.BitPackedDeltaEncoding, chunk=1000).persist()
     # 1) every chunk round-trips in-kernel
     assert fused.filter(~F.col("roundtrip_ok")).count() == 0
-    # 2) fused base rollup == standalone base rollup (exact)
-    a = base_rollup_from_fused(fused).orderBy("doc_id", "bucket").collect()
-    b = (
-        rollup_tokens_base(toks, 60)
-        .orderBy("doc_id", "bucket")
-        .collect()
-    )
-    assert len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert (ra.doc_id, ra.bucket, ra.vmin, ra.vmax, ra.vcount) == (
-            rb.doc_id,
-            rb.bucket,
-            rb.vmin,
-            rb.vmax,
-            rb.vcount,
-        )
-        assert abs(ra.vsum - rb.vsum) < 1e-6
-    # 3) the blocks projection decodes back to the original sequences
+    # 2) every fused tier == the reference tier rollup, row for row
+    ref = tier_rollups(toks)
+    counts = {}
+    for name in TIERS:
+        a = tier_from_fused(fused, name).orderBy("doc_id", "bucket").collect()
+        b = ref[name].orderBy("doc_id", "bucket").collect()
+        assert len(a) == len(b) > 0, name
+        for ra, rb in zip(a, b):
+            assert (ra.doc_id, ra.bucket, ra.vmin, ra.vmax, ra.vcount) == (
+                rb.doc_id, rb.bucket, rb.vmin, rb.vmax, rb.vcount
+            ), name
+            assert ra.vsum / ra.vcount == rb.vmean, name
+        counts[name] = len(b)
+        if name == "1d":  # edge_long spans two days
+            assert [r.bucket for r in a if r.doc_id == "edge_long"] == [0, 1]
+    # 3) the flagship's four rows == values derived from the reference
+    want_bytes = compress_blocks(toks, Method.BitPackedDeltaEncoding, chunk=1000).agg(
+        F.sum("bytes")
+    ).first()[0]
+    n_values = ref["1m"].agg(F.sum("vcount")).first()[0]
+    got = {r.gid: r.asDict() for r in flagship_summary(fused).collect()}
+    rows = {0: counts["1m"], 1: counts["1h"], 3: counts["1d"], 15: 1}
+    assert got == {
+        gid: {"gid": gid, "rows": n, "all_ok": 1, "bytes": want_bytes, "n_values": n_values}
+        for gid, n in rows.items()
+    }
+    # 4) the blocks projection decodes back to the original sequences
     blocks = blocks_from_fused(fused, Method.BitPackedDeltaEncoding)
     restored = {r.doc_id: r.tokens for r in reassemble(decompress_blocks(blocks)).collect()}
     for r in toks.collect():
-        assert restored[r.doc_id] == r.tokens
+        assert restored.get(r.doc_id, []) == r.tokens
     fused.unpersist()
     toks.unpersist()
+
+
+def test_fused_chimp128_blobs_match_compress_blocks(spark):
+    """Every method takes the batch-codec path; NaN and -0.0 must
+    round-trip bit for bit, and the blobs are compress_blocks' blobs."""
+    rng = np.random.default_rng(3)
+    vals = rng.normal(0, 1e3, 2500)
+    vals[[5, 700, 1999]] = [float("nan"), -0.0, float("inf")]
+    toks = spark.createDataFrame(
+        [("d0", vals.tolist()), ("d1", []), ("d2", [1.5]), ("d3", rng.normal(size=999).tolist())],
+        "doc_id string, tokens array<double>",
+    )
+    fused = fused_compress_rollup(toks, Method.Chimp128, chunk=1000)
+    got = {(r.doc_id, r.chunk_id): (r.roundtrip_ok, r.blob) for r in fused.collect()}
+    want = {
+        (r.doc_id, r.chunk_id): r.blob
+        for r in compress_blocks(toks, Method.Chimp128, chunk=1000).collect()
+    }
+    assert got.keys() == want.keys()
+    assert all(ok for ok, _ in got.values())
+    assert {k: bytes(b) for k, (_, b) in got.items()} == {k: bytes(b) for k, b in want.items()}
+
+
+def test_roundtrip_ok_is_per_chunk_bit_equality():
+    """A lossy codec reproduces a constant chunk exactly and a varying
+    one not: the verdict lands on the right chunks."""
+    docs = [[7] * 10 + list(range(10)), list(range(5)), [], [3] * 10]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["a", "b", "c", "d"]), pa.array(docs, type=pa.list_(pa.int32()))],
+        names=["doc_id", "tokens"],
+    )
+    out = _fused_batch(batch, Method.PoorMansCompressionMean, {"abs_error_bound": 10.0}, 10)
+    assert out.column("chunk_id").to_pylist() == [0, 1, 0, 0, 0]
+    assert out.column("roundtrip_ok").to_pylist() == [True, False, False, True, True]
+
+
+def test_roundtrip_ok_on_a_short_decode(monkeypatch):
+    """A chunk that decodes to the wrong length fails; the chunks after
+    it are still compared value for value."""
+    from tersets_spark.operators import pipeline
+
+    real = pipeline.decompress_batch
+
+    def drop_one(blobs):  # chunk 1 decodes one value short
+        flat, off = real(blobs)
+        flat = np.delete(flat, off[1])
+        return flat, np.concatenate((off[:2], off[2:] - 1))
+
+    monkeypatch.setattr(pipeline, "decompress_batch", drop_one)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["a", "b"]), pa.array([list(range(8)), [5, 6]], type=pa.list_(pa.int32()))],
+        names=["doc_id", "tokens"],
+    )
+    out = _fused_batch(batch, Method.BitPackedDeltaEncoding, {}, 4)
+    assert out.column("roundtrip_ok").to_pylist() == [True, False, True]
+
+
+def test_null_tokens_row_fails_loudly(spark):
+    toks = spark.createDataFrame([("a", [1, 2]), ("b", None), ("c", [3])], TOKENS)
+    with pytest.raises(Exception, match="null tokens for doc_id 'b'"):
+        fused_compress_rollup(toks.coalesce(1)).collect()
