@@ -32,6 +32,7 @@ Width classes mirror the reference's 2-bit prefix scheme
 from __future__ import annotations
 
 import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 
 from ..methods import check_decode_count
 
@@ -280,105 +281,104 @@ def compress_batch(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     return blobs  # type: ignore[return-value]
 
 
+def _unpack_blocks(buf: np.ndarray, bstart: np.ndarray, w: int) -> np.ndarray:
+    """The (blocks, 8) uint64 values of the width-``w`` (1..64) blocks of
+    8 values that start at byte offsets ``bstart`` of ``buf``.
+
+    A block is w bytes and value j always sits at bit offset j*w, so one
+    (blocks, w + window) byte matrix — a sliding-window view indexed by
+    the block starts — gives each j a fixed-offset big-endian window
+    column: 8 shift-and-mask passes decode the group (the inverse of
+    pack_bits' byte-window scatter). The bytes past a block belong to
+    the next one and are masked off. Windows are u32 while shift + w
+    fits (w <= 25), u64 up to w = 57; wider widths go to unpack_bits."""
+    if w > 57:
+        mat = sliding_window_view(buf, w)[bstart].ravel()
+        return unpack_bits(mat, np.full(8 * bstart.size, w, np.int64)).reshape(-1, 8)
+    nb = 4 if w <= 25 else 8
+    wt = np.dtype(f"u{nb}").type
+    mat = sliding_window_view(buf, w + nb)[bstart]
+    out = np.empty((bstart.size, 8), dtype=np.uint64)
+    for j in range(8):
+        byte0, sh = divmod(j * w, 8)
+        win = np.ndarray(bstart.size, f">u{nb}", mat, byte0, (w + nb,))
+        np.bitwise_and(win >> wt(8 * nb - w - sh), wt((1 << w) - 1), out=out[:, j])
+    return out
+
+
 def decompress_batch(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
     """Batched inverse of :func:`compress_batch`: returns (flat float64,
-    offsets). Mode-0 delta rows decode in one global unpack; anything
-    else falls back to the registry decoder per row."""
+    offsets). Mode-0 delta rows at scale 1.0 decode block-of-8; anything
+    else falls back to the registry decoder per row.
+
+    Every row's packed section is padded to a multiple of 8 values, so
+    8 values at width w take exactly w bytes. Rows are width-sorted and
+    each width group decodes its blocks in one :func:`_unpack_blocks`
+    call; the deltas are scattered to their output slots (a row's pad
+    slots to one sink slot past the end). Each row start holds the
+    row's first value minus the previous fast row's last value, so ONE
+    global cumsum rebuilds every row."""
     from . import registry  # late import: avoid cycle
 
     n_rows = len(blobs)
-    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    # 8 zero bytes past the end keep every window read inside the buffer
+    buf = np.frombuffer(b"".join(blobs) + bytes(8), dtype=np.uint8)
     blob_lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=n_rows)
     blob_off = np.concatenate(([0], np.cumsum(blob_lens)))
-    is_delta0 = np.zeros(n_rows, dtype=bool)
-    big_enough = blob_lens >= _HEADER + _INT_HEAD + 1
-    idx = np.flatnonzero(big_enough)
-    if idx.size:
-        # fast path: mode 0, method byte 21, scale exactly 1.0
-        scale_idx = blob_off[idx][:, None] + (5 + np.arange(8))[None, :]
-        scales = buf[scale_idx].copy().view(np.float64).ravel()
-        is_delta0[idx] = (
-            (buf[blob_off[idx]] == 0)
-            & (buf[blob_off[idx + 1] - 1] == _METHOD_BYTE)
-            & (scales == 1.0)
-        )
-    # corrupt-count guard (tier blocks are read back from storage): a
-    # row whose declared count is implausible or whose packed section
-    # exceeds its actual blob length leaves the fast path and goes to
-    # the per-row registry decoder, which raises a typed error
-    if idx.size and is_delta0.any():
-        chk = np.flatnonzero(is_delta0)
-        h2 = buf[blob_off[chk][:, None] + np.arange(_HEADER + _INT_HEAD)[None, :]]
-        cnt2 = h2[:, 1:5].copy().view(np.uint32).ravel().astype(np.int64)
-        w2 = h2[:, 29].astype(np.int64)
-        m8_2 = np.maximum(cnt2 - 1, 0)
-        m8_2 = m8_2 + (-m8_2) % 8
-        need = _HEADER + _INT_HEAD + (w2 * m8_2) // 8 + 1
-        # mode-0 blob length is DETERMINISTIC in (count, width): require
-        # exact equality, and count >= 2 (single values store Uncompressed)
-        ok2 = (cnt2 >= 2) & (cnt2 <= 1 << 27) & (w2 <= 64) & (need == blob_lens[chk])
-        is_delta0[chk[~ok2]] = False
+    sel = np.flatnonzero(blob_lens > _HEADER + _INT_HEAD)
+    head = buf[blob_off[sel][:, None] + np.arange(_HEADER + _INT_HEAD)[None, :]]
+    cnt = head[:, 1:5].copy().view(np.uint32).ravel().astype(np.int64)
+    widths = head[:, 29].astype(np.int64)
+    nblk = (cnt + 6) // 8  # ceil((cnt - 1) / 8) blocks of 8 deltas
+    # fast path: mode 0, method byte 21, scale exactly 1.0. Corrupt-count
+    # guard (tier blocks are read back from storage): the mode-0 blob
+    # length is DETERMINISTIC in (count, width), so a row whose count is
+    # implausible or whose length differs goes to the per-row registry
+    # decoder, which raises a typed error (count >= 2: single values
+    # store Uncompressed)
+    ok = (
+        (head[:, 0] == 0)
+        & (buf[blob_off[sel + 1] - 1] == _METHOD_BYTE)
+        & (head[:, 5:13].copy().view(np.float64).ravel() == 1.0)
+        & (cnt >= 2)
+        & (cnt <= 1 << 27)
+        & (widths <= 64)
+        & (_HEADER + _INT_HEAD + widths * nblk + 1 == blob_lens[sel])
+    )
+    sel, head, cnt, widths, nblk = sel[ok], head[ok], cnt[ok], widths[ok], nblk[ok]
     counts = np.zeros(n_rows, dtype=np.int64)
-    sel = np.flatnonzero(is_delta0)
-    out_parts: dict[int, np.ndarray] = {}
-    if sel.size:
-        starts = blob_off[sel]
-        # gather fixed-size headers into a matrix
-        hidx = starts[:, None] + np.arange(_HEADER + _INT_HEAD)[None, :]
-        head = buf[hidx]
-        counts[sel] = head[:, 1:5].copy().view(np.uint32).ravel().astype(np.int64)
-        firsts = head[:, 13:21].copy().view(np.int64).ravel()
-        mds = head[:, 21:29].copy().view(np.int64).ravel()
-        widths = head[:, 29].astype(np.int64)
-        d_lens = np.maximum(counts[sel] - 1, 0)
-        p_lens = d_lens + ((-d_lens) % 8)
-        sec_bytes = (widths * p_lens) // 8
-        sec_starts = starts + _HEADER + _INT_HEAD
-        dr_off = np.concatenate(([0], np.cumsum(d_lens)))
-        rebased = np.zeros(int(d_lens.sum()), dtype=np.uint64)
-        # per width-group: gather that group's sections back-to-back and
-        # decode them with one fixed-width unpack
-        for w in np.unique(widths):
-            g = np.flatnonzero(widths == w)
-            if int(w) == 0:
-                continue  # zero-width rows decode to all-zero rebased
-            gidx = np.repeat(sec_starts[g], sec_bytes[g]) + segment_intra_indices(
-                sec_bytes[g]
-            )
-            vals = unpack_bits(buf[gidx], np.full(int(p_lens[g].sum()), int(w), np.int64))
-            g_off = np.concatenate(([0], np.cumsum(p_lens[g])))
-            src = np.repeat(g_off[:-1], d_lens[g]) + segment_intra_indices(d_lens[g])
-            dst = np.repeat(dr_off[:-1][g], d_lens[g]) + segment_intra_indices(
-                d_lens[g]
-            )
-            rebased[dst] = vals[src]
-        deltas = (rebased + np.repeat(mds.view(np.uint64), d_lens)).view(np.int64)
-        # per-row cumsum via global cumsum minus the value at row starts
-        dr_off = np.concatenate(([0], np.cumsum(d_lens)))
-        g = np.cumsum(deltas)
-        base = np.concatenate(([0], g))[dr_off[:-1]]
-        within = g - np.repeat(base, d_lens)
-        vals = np.repeat(firsts, d_lens) + within
-    slow = np.flatnonzero(~is_delta0)
-    for r in slow:
-        out_parts[r] = registry.decompress(bytes(blobs[r]))
-        counts[r] = out_parts[r].size
+    counts[sel] = cnt
+    slow = np.setdiff1d(np.arange(n_rows), sel)
+    out_parts = [registry.decompress(bytes(blobs[r])) for r in slow]
+    counts[slow] = [p.size for p in out_parts]
     offsets = np.concatenate(([0], np.cumsum(counts)))
-    flat = np.empty(int(offsets[-1]), dtype=np.float64)
+    x = np.zeros(int(offsets[-1]) + 1, dtype=np.int64)  # x[-1]: pad sink
     if sel.size:
-        # scatter fast-path rows straight into the flat output — first
-        # value at each row start, reconstructed tail elsewhere — no
-        # per-row temporaries, no second concatenate pass
-        tail_mask = np.zeros(flat.size, dtype=bool)
-        tail_mask[
-            np.repeat(offsets[sel], counts[sel])
-            + segment_intra_indices(counts[sel])
-        ] = True
-        tail_mask[offsets[sel]] = False
-        flat[offsets[sel]] = firsts
-        flat[tail_mask] = vals
-    for k, r in enumerate(slow):
-        flat[offsets[r] : offsets[r + 1]] = out_parts[r]
+        starts = offsets[sel]
+        order = np.argsort(widths.astype(np.uint8), kind="stable")  # u8: radix
+        ws, nb = widths[order], nblk[order]
+        intra = segment_intra_indices(nb)
+        bstart = np.repeat(blob_off[sel][order] + _HEADER + _INT_HEAD, nb)
+        bstart += np.repeat(ws, nb) * intra
+        dst = (np.repeat(starts[order] + 1, nb) + 8 * intra)[:, None] + np.arange(8)
+        b_off = np.concatenate(([0], np.cumsum(nb)))
+        tail = dst[b_off[1:] - 1]  # each row's last block holds its pads
+        tail[np.arange(8)[None, :] >= (cnt[order] - 8 * nb + 7)[:, None]] = x.size - 1
+        dst[b_off[1:] - 1] = tail
+        mds = np.repeat(head[order, 21:29].view(np.uint64).ravel(), nb)
+        grp = np.concatenate(([0], np.flatnonzero(np.diff(ws)) + 1, [ws.size]))
+        for a, b in zip(grp[:-1], grp[1:]):
+            lo, hi, w = b_off[a], b_off[b], int(ws[a])
+            vals = mds[lo:hi, None]
+            if w:
+                vals = _unpack_blocks(buf, bstart[lo:hi], w) + vals
+            x[dst[lo:hi]] = vals.view(np.int64)
+        x[starts] = head[:, 13:21].copy().view(np.int64).ravel()
+        x[starts[1:]] -= np.add.reduceat(x[:-1], starts)[:-1]
+        np.cumsum(x, out=x)
+    flat = x[:-1].astype(np.float64)
+    for r, part in zip(slow, out_parts):
+        flat[offsets[r] : offsets[r + 1]] = part
     return flat, offsets
 
 

@@ -26,7 +26,28 @@ def split_aged(df: DataFrame, raw_retention: int) -> tuple[DataFrame, DataFrame]
     """Split ``(doc_id, tokens, n_tok, ...)`` into (kept_raw, aged):
     the newest ``raw_retention`` positions stay raw; the older prefix is
     returned for compaction. Rows shorter than the horizon pass through
-    untouched."""
+    untouched.
+
+    The slices trust ``n_tok``, so a row whose ``n_tok`` is not
+    ``size(tokens)``, or whose ``tokens`` is null, fails the query with
+    an error naming its ``doc_id`` (a ``raise_error`` in the projection
+    both outputs read; no extra Spark job)."""
+    df = df.withColumn(
+        "n_tok",
+        F.when(
+            F.col("tokens").isNotNull() & (F.size("tokens") == F.col("n_tok")),
+            F.col("n_tok"),
+        ).otherwise(
+            F.raise_error(
+                F.format_string(
+                    "split_aged: doc_id %s has n_tok %s but %s tokens",
+                    "doc_id",
+                    "n_tok",
+                    F.size("tokens"),
+                )
+            )
+        ),
+    )
     aged_len = F.greatest(F.col("n_tok") - raw_retention, F.lit(0))
     aged = (
         df.filter(F.col("n_tok") > raw_retention)

@@ -8,8 +8,10 @@ these tests pin the pieces that can break without Spark."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import bench
 
@@ -142,7 +144,7 @@ def test_bench_end_to_end_contract(tmp_path):
         SPARK_GRAFT_BENCH_OUT=str(tmp_path),
     )
     proc = subprocess.run(
-        [os.sys.executable, "/root/repo/bench.py"],
+        [os.sys.executable, str(ROOT / "bench.py")],
         capture_output=True, text=True, timeout=420, env=env,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

@@ -11,8 +11,9 @@ extract/rebuild must be covered by some driver-visible row.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as e
 from tersets_spark.methods import Method

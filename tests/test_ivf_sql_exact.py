@@ -8,13 +8,14 @@ driver's CORRECTNESS gate a round later)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tersets_spark.operators.similarity import _kmeans  # noqa: E402
 

@@ -494,3 +494,119 @@ def test_corrupt_xor_header_sig_zero_keeps_legacy_decode() -> None:
     blob[14] = (blob[14] & 0x0F) | 0x10
     out = registry.decompress(bytes(blob))
     assert out.size == v.size  # decodes, possibly-garbage values, no raise
+
+
+def _delta_width_row(rng: np.random.Generator, w: int, n: int) -> np.ndarray:
+    """An integer series whose compress_batch row has rebased-delta bit
+    width exactly ``w`` (0..64): w >= 3 swings between -A and +A with
+    A = 2**(w-3), so the rebased span is 4A = 2**(w-1); every value is a
+    small multiple of a power of two, hence exact in float64."""
+    if w == 0:
+        return 5.0 + 3.0 * np.arange(n)
+    if w < 3:
+        d = rng.integers(0, 1 << w, n - 1)
+        d[:2] = (0, (1 << w) - 1)[: n - 1]
+        return np.concatenate(([7.0], 7.0 + np.cumsum(d)))
+    a = 2 ** (w - 3)
+    step = max(a >> 10, 1)
+    v = rng.integers(-(a // step), a // step + 1, n) * step
+    v[:3] = (-a, a, -a)[:n]
+    return v.astype(np.float64)
+
+
+def _delta_decode_batch() -> tuple[list[bytes], np.ndarray, np.ndarray]:
+    """compress_batch blobs with fast rows at every width 0..64 and
+    lengths that leave 1..8 values in the last block, interleaved with
+    rows the fast path must refuse: mixed mode (NaN, -0.0), a non-unit
+    scale, a single value and an empty row."""
+    from tersets_spark.kernels import delta
+
+    rng = np.random.default_rng(64)
+    slow = [
+        np.array([1.0, np.nan, -0.0, 4.0, 9.0]),
+        np.array([0.5, 1.25, 2.0, 2.75]),
+        np.array([3.0]),
+        np.empty(0),
+    ]
+    rows = []
+    for w in range(65):
+        for n in (2, 9, 10 + w % 8, 200 + w):
+            rows.append(_delta_width_row(rng, w, n))
+        rows.append(slow[w % len(slow)])
+    flat = np.concatenate(rows)
+    offs = np.concatenate(([0], np.cumsum([r.size for r in rows]))).astype(np.int64)
+    blobs = delta.compress_batch(flat, offs)
+    assert {b[29] for b in blobs if _is_fast_row(b)} == set(range(65))
+    return blobs, flat, offs
+
+
+def _is_fast_row(blob: bytes) -> bool:
+    """A mode-0, scale-1.0 delta blob: the batch decoder's fast path."""
+    return (
+        len(blob) > 30
+        and blob[-1] == int(Method.BitPackedDeltaEncoding)
+        and blob[0] == 0
+        and blob[5:13] == np.float64(1.0).tobytes()
+    )
+
+
+def _per_row_decode(blob: bytes) -> np.ndarray:
+    from tersets_spark.kernels import delta
+
+    if blob and blob[-1] == int(Method.BitPackedDeltaEncoding):
+        return delta.decompress(blob[:-1])
+    return registry.decompress(blob)
+
+
+def test_delta_batch_decode_equals_per_row_at_every_width(monkeypatch) -> None:
+    """The block-of-8 batch decoder returns the same (flat bits, offsets)
+    as per-row delta.decompress on fast rows of every width 0..64 (the
+    zero-width rows, the byte-window widths 1..57 and the unpack_bits
+    widths 58..64), with slow rows in between — and only the slow rows
+    reach the per-row registry decoder."""
+    from tersets_spark.kernels import delta
+
+    blobs, flat, offs = _delta_decode_batch()
+    per_row = [_per_row_decode(b) for b in blobs]
+    want = np.concatenate(per_row)
+    assert np.array_equal(want.view(np.uint64), flat.view(np.uint64))
+    seen: list[bytes] = []
+    real = registry.decompress
+    monkeypatch.setattr(registry, "decompress", lambda b: seen.append(b) or real(b))
+    got_flat, got_off = delta.decompress_batch(blobs)
+    assert np.array_equal(got_off, np.cumsum([0] + [p.size for p in per_row]))
+    assert np.array_equal(got_flat.view(np.uint64), want.view(np.uint64))
+    assert seen == [b for b in blobs if not _is_fast_row(b)]
+    assert len(seen) == 65  # one slow row per width step
+
+
+@pytest.mark.parametrize("corruption", ["count+1", "width+1", "truncated"])
+def test_delta_batch_decode_corrupt_row_leaves_fast_path(monkeypatch, corruption) -> None:
+    """A corrupted fast-path blob inside a batch fails the header guard
+    (exact mode-0 length for its count and width), goes to the per-row
+    registry decoder and raises from it — never a silent decode."""
+    from tersets_spark.kernels import delta
+    from tersets_spark.kernels.registry import CorruptBlobError
+
+    blobs, _, _ = _delta_decode_batch()
+    # a width-18 row with 8 deltas: count + 1 needs a second block
+    nine = np.uint32(9).tobytes()
+    k = next(
+        i for i, b in enumerate(blobs) if _is_fast_row(b) and (b[1:5], b[29]) == (nine, 18)
+    )
+    blob = bytearray(blobs[k])
+    if corruption == "count+1":
+        blob[1:5] = np.uint32(10).tobytes()
+    elif corruption == "width+1":
+        blob[29] += 1
+    else:
+        del blob[-2]
+    blobs[k] = bytes(blob)
+    with pytest.raises(CorruptBlobError):
+        registry.decompress(blobs[k])
+    seen: list[bytes] = []
+    real = registry.decompress
+    monkeypatch.setattr(registry, "decompress", lambda b: seen.append(b) or real(b))
+    with pytest.raises(CorruptBlobError):
+        delta.decompress_batch(blobs)
+    assert seen[-1] == blobs[k]

@@ -139,6 +139,27 @@ def test_split_aged_partitions_tokens(spark, tokens_df):
             assert k[doc] == toks and doc not in a
 
 
+@pytest.mark.parametrize(
+    "bad,message",
+    [
+        (("b", [4, 5, 6], 7), "doc_id b has n_tok 7 but 3 tokens"),
+        (("b", None, 2), "doc_id b has n_tok 2 but"),
+    ],
+    ids=["n_tok-mismatch", "null-tokens"],
+)
+def test_split_aged_rejects_broken_input_contract(spark, bad, message):
+    """A row whose declared n_tok is not size(tokens), or whose tokens
+    are null, would be mis-sliced; both outputs fail naming its doc_id."""
+    df = spark.createDataFrame(
+        [("a", [1, 2, 3, 4], 4), bad, ("c", [7], 1)],
+        "doc_id string, tokens array<int>, n_tok int",
+    )
+    kept, aged = split_aged(df, 2)
+    for out in (kept, aged):
+        with pytest.raises(Exception, match=message):
+            out.collect()
+
+
 def test_prune_tier(spark):
     rows = [("a", b, 1.0, 1.0, 1.0, 1) for b in range(10)]
     df = spark.createDataFrame(

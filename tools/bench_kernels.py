@@ -1,18 +1,21 @@
 """Per-method single-core kernel microbenchmarks -> markdown table,
-plus the batch-vs-single A/Bs of the batched Chimp64 encoder and the
-Chimp128 / Elf batch decoders.
+plus the batch-vs-single A/Bs of the batched delta and Chimp64 encoders
+and the delta / Chimp128 / Elf batch decoders.
 
-Usage: python tools/bench_kernels.py   (appends/refreshes KERNELS.md)
+Usage: python tools/bench_kernels.py   (refreshes KERNELS.md of the
+checkout this script lives in)
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from tersets_spark.kernels import registry  # noqa: E402
 from tersets_spark.methods import LOSSLESS_METHODS, Method  # noqa: E402
@@ -55,7 +58,6 @@ def main() -> None:
         "",
         "4096-value series (tokens for lossless, sinusoid+noise for lossy),",
         f"config {CFG}. Rates in Mtok/s, single core, this sandbox's CPU.",
-        "Batched variants (delta) run 1.5-3x faster per core (see BENCH.md).",
         "",
         "| method | code | compress | decompress | ratio |",
         "|---|---|---|---|---|",
@@ -69,14 +71,13 @@ def main() -> None:
     tail = ""
     marker = "<!-- hand-curated below"
     try:
-        prev = open("/root/repo/KERNELS.md").read()
+        prev = (ROOT / "KERNELS.md").read_text()
         if marker in prev:
             i = prev.index(marker)
             tail = "\n" + prev[i:]
     except FileNotFoundError:
         pass
-    with open("/root/repo/KERNELS.md", "w") as f:
-        f.write("\n".join(lines) + "\n" + tail)
+    (ROOT / "KERNELS.md").write_text("\n".join(lines) + "\n" + tail)
     print("\n".join(lines))
 
 
@@ -89,22 +90,36 @@ def _median_ratio(single, batch) -> float:
 def batch_ab_lines() -> list[str]:
     """Batch-vs-single A/Bs (byte identity is pinned by
     tests/test_kernels_lossless.py)."""
-    from tersets_spark.kernels import chimp, elf
+    from tersets_spark.kernels import chimp, delta, elf
 
     rng = np.random.default_rng(5)
     rows = [rng.integers(0, 131072, 4096).astype(np.float64) for _ in range(64)]
     flat = np.concatenate(rows)
     offs = np.concatenate(([0], np.cumsum([r.size for r in rows]))).astype(np.int64)
-    enc = _median_ratio(
-        lambda: [chimp.compress_chimp64(r) for r in rows],
-        lambda: chimp.compress_batch(flat, offs),
-    )
+    m = Method.BitPackedDeltaEncoding
+    blobs = delta.compress_batch(flat, offs)
+    shape = "64 x 4096 tokens"
+    ratios = [
+        ("delta batch encode", _median_ratio(
+            lambda: [registry.compress(r, m) for r in rows],
+            lambda: delta.compress_batch(flat, offs),
+        )),
+        ("delta batch decode", _median_ratio(
+            lambda: [registry.decompress(b) for b in blobs],
+            lambda: delta.decompress_batch(blobs),
+        )),
+        ("Chimp64 batch encode", _median_ratio(
+            lambda: [chimp.compress_chimp64(r) for r in rows],
+            lambda: chimp.compress_batch(flat, offs),
+        )),
+    ]
     lines = [
-        "Batch A/Bs, median of 9 interleaved single/batch pairs:",
+        "Batch A/Bs (batch path vs the per-row path over the same rows),",
+        "median of 9 interleaved single/batch pairs:",
         "",
         "| path | shape | batch speedup |",
         "|---|---|---|",
-        f"| Chimp64 batch encode | 64 x 4096 tokens | {enc:.2f}x |",
+        *(f"| {name} | {shape} | {r:.2f}x |" for name, r in ratios),
     ]
     rng = np.random.default_rng(3)
     lens = rng.integers(200, 400, 1000)
