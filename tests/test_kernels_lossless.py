@@ -498,7 +498,8 @@ def test_corrupt_xor_header_sig_zero_keeps_legacy_decode() -> None:
 
 def _delta_width_row(rng: np.random.Generator, w: int, n: int) -> np.ndarray:
     """An integer series whose compress_batch row has rebased-delta bit
-    width exactly ``w`` (0..64): w >= 3 swings between -A and +A with
+    width exactly ``w`` (0..64) when ``n >= 3`` (a 2-value row has one
+    delta, so width 0): w >= 3 swings between -A and +A with
     A = 2**(w-3), so the rebased span is 4A = 2**(w-1); every value is a
     small multiple of a power of two, hence exact in float64."""
     if w == 0:
