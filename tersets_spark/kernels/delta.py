@@ -32,7 +32,6 @@ Width classes mirror the reference's 2-bit prefix scheme
 from __future__ import annotations
 
 import numpy as np
-from numpy.lib.stride_tricks import sliding_window_view
 
 from ..methods import check_decode_count
 
@@ -163,122 +162,123 @@ def compress(values: np.ndarray, config: dict | None = None) -> bytes:
 _HEADER = 13  # mode u8 + count u32 + scale f64
 _INT_HEAD = 17  # first i64 + min_delta i64 + width u8
 _METHOD_BYTE = 21  # Method.BitPackedDeltaEncoding
+_PACK_CHUNK = 8192  # blocks per _pack_blocks call: its passes stay in L2
 
 
 def compress_batch(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     """Batched compress: many series in ONE numpy pass.
 
     ``flat`` is the concatenation of all series (float64), ``offsets``
-    the (n_rows+1) boundaries. Produces exactly the same per-row blob
-    (mode-0 layout + trailing method byte) as :func:`compress`; rows
-    that don't qualify for the all-int fast path (non-integral,
-    non-finite, too large, len<2) fall back to the single-series
-    encoder. This is the engine's hot path: per-batch cost is ~20 numpy
-    ops + one bytes-assembly loop, instead of ~40 numpy calls per row
-    (SURVEY.md §4.2 'vectorized execution' requirement)."""
+    the (n_rows+1) boundaries. A row of >= 2 values, all exact int64
+    with |v| < 2**62, encodes block-of-8 in the mode-0, scale-1.0 layout
+    (byte for byte what :func:`compress` writes for |v| <= 1e15; past
+    that compress escapes values to raw f64); any other row goes to the
+    single-series encoder. Every blob ends in its method byte.
+
+    The mirror of :func:`decompress_batch`: one full-length diff; each
+    row's min and max delta from two reduceats over (start, end) pairs,
+    its width the bit length of their difference; then the rows are
+    width-sorted, their blocks of 8 deltas gathered as one (blocks, 8)
+    matrix, and each width group packs with :func:`_pack_blocks` straight
+    into the batch's blob buffer beside the vectorized headers. No
+    per-value index array is built."""
     offsets = np.asarray(offsets, dtype=np.int64)
-    n_rows = offsets.size - 1
     lens = np.diff(offsets)
     with np.errstate(invalid="ignore"):
-        int_ok = np.isfinite(flat) & (np.abs(flat) < 2**62) & (flat == np.floor(flat))
-    # BITWISE round-trip gate, mirroring the single-series _find_scale:
-    # the de-scaled integer must reproduce the original f64 bit pattern,
-    # so -0.0 (int 0 -> +0.0) escapes to the fallback encoder.
-    probe = np.where(int_ok, flat, 0.0).astype(np.int64)
-    int_ok &= probe.astype(np.float64).view(np.uint64) == flat.view(np.uint64)
-    # row validity via prefix-sum of violations — exact for empty rows at
-    # any position (reduceat clips offsets at flat.size-1 and would leak
-    # the last element out of the final non-empty row's check)
-    c = np.concatenate(([0], np.cumsum(~int_ok)))
-    row_ok = (c[offsets[1:]] == c[offsets[:-1]]) & (lens >= 2)
-    blobs: list[bytes | None] = [None] * n_rows
-    # ---- vectorized all-int rows ----
-    ok_rows = np.flatnonzero(row_ok)
-    if ok_rows.size:
-        ints = probe  # int64 view of flat, 0 at non-ok slots (unused rows)
-        d_all = ints[1:] - ints[:-1] if ints.size > 1 else np.zeros(0, np.int64)
-        d_lens = np.maximum(lens - 1, 0)
-        # keep only deltas whose endpoints are in the same row (exact for
-        # any mix of empty/short rows): a delta at position i crosses a
-        # row boundary iff some offset equals i+1, so clearing the
-        # boundary positions replaces the former full-length
-        # repeat(arange, lens) row-id array (measured ~0.4 s/batch) with
-        # a scatter of n_rows bits
-        keep = np.ones(max(flat.size - 1, 0), dtype=bool)
-        bounds = offsets[1:-1] - 1
-        bounds = bounds[(bounds >= 0) & (bounds < keep.size)]
-        keep[bounds] = False
-        d_rows = d_all[keep]  # concatenated per-row deltas
-        dr_off = np.concatenate(([0], np.cumsum(d_lens)))
-        # min delta per selected row
-        md = np.zeros(n_rows, dtype=np.int64)
-        nz = d_lens > 0
-        if nz.any():
-            md[nz] = np.minimum.reduceat(d_rows, dr_off[:-1][nz])
-        md_u = md.view(np.uint64)
-        rebased = d_rows.view(np.uint64) - np.repeat(md_u, d_lens)
-        widths = np.zeros(n_rows, dtype=np.int64)
-        if nz.any():
-            maxes = np.zeros(n_rows, dtype=np.uint64)
-            maxes[nz] = np.maximum.reduceat(rebased, dr_off[:-1][nz])
-            widths = bit_length(maxes)
-        # pack per width-group: every row's count is padded to a multiple
-        # of 8 values so its section is byte-aligned at ANY width — one
-        # fixed-width pack per distinct width covers all its rows.
-        # Round 10: rows are width-SORTED once (u8 key — radix sort, see
-        # the playbook's argsort note) so ONE global gather/scatter
-        # builds every group's padded value array contiguously and each
-        # width packs a contiguous slice; the former per-group loop
-        # re-ran repeat + segment_intra_indices twice per distinct
-        # width (~20 full-size temps per batch, measured ~1.2 s of a
-        # 4.9 s batch).
-        sel_idx = ok_rows
-        p_lens = d_lens + ((-d_lens) % 8)
-        sec_bytes = (widths * p_lens) // 8
-        sections: dict[int, bytes] = {}  # row -> packed section
-        order = np.argsort(widths[sel_idx].astype(np.uint8), kind="stable")
-        rows_sorted = sel_idx[order]
-        ws = widths[rows_sorted]
-        p_s = p_lens[rows_sorted]
-        d_s = d_lens[rows_sorted]
-        g_off = np.concatenate(([0], np.cumsum(p_s)))
-        intra = segment_intra_indices(d_s)
-        dst = np.repeat(g_off[:-1], d_s) + intra
-        src = np.repeat(dr_off[:-1][rows_sorted], d_s) + intra
-        vals = np.zeros(int(g_off[-1]), dtype=np.uint64)
-        vals[dst] = rebased[src]
-        uniq_w, first_i = np.unique(ws, return_index=True)
-        parts: list[bytes] = []
-        for i, w in enumerate(uniq_w):
-            hi = first_i[i + 1] if i + 1 < uniq_w.size else rows_sorted.size
-            seg = vals[g_off[first_i[i]] : g_off[hi]]
-            parts.append(pack_bits(seg, int(w)) if int(w) else b"")
-        packed_all = b"".join(parts)
-        mv = memoryview(packed_all)
-        sb = np.concatenate(([0], np.cumsum(sec_bytes[rows_sorted])))
-        for k, r in enumerate(rows_sorted):
-            sections[int(r)] = bytes(mv[sb[k] : sb[k + 1]])
-        # headers: (30-byte) rows assembled vectorized
-        head = np.zeros((sel_idx.size, _HEADER + _INT_HEAD), dtype=np.uint8)
-        head[:, 0] = 0  # mode
-        head[:, 1:5] = lens[sel_idx].astype(np.uint32)[:, None].view(np.uint8)
-        head[:, 5:13] = np.full(sel_idx.size, 1.0)[:, None].view(np.uint8)
-        head[:, 13:21] = ints[offsets[:-1][sel_idx]][:, None].view(np.uint8)
-        head[:, 21:29] = md[sel_idx][:, None].view(np.uint8)
-        head[:, 29] = widths[sel_idx].astype(np.uint8)
-        tail = bytes([_METHOD_BYTE])
-        for k, r in enumerate(sel_idx):
-            blobs[r] = head[k].tobytes() + sections[int(r)] + tail
-    # ---- fallback rows ----
+        ints = flat.astype(np.int64)
+    # BITWISE round-trip gate, as in the single-series _find_scale: the
+    # int must reproduce the f64 bit pattern (NaN, -0.0 and fractions
+    # escape). The strict |v| < 2**62 bound is one unsigned compare, run
+    # only when the batch's int range reaches past it
+    refused = ints.astype(np.float64).view(np.uint64) != flat.view(np.uint64)
+    if ints.size and (ints.min() <= -(2**62) or ints.max() >= 2**62):
+        refused |= ints.view(np.uint64) + np.uint64(2**62 - 1) > np.uint64(2**63 - 2)
+    row_ok = lens >= 2
+    row_ok[np.searchsorted(offsets, np.flatnonzero(refused), side="right") - 1] = False
+    sel = np.flatnonzero(row_ok)
+    blobs = [b""] * lens.size
+    if sel.size:
+        starts, d_lens = offsets[sel], lens[sel] - 1
+        d = np.empty(flat.size + 7, dtype=np.int64)
+        np.subtract(ints[1:], ints[:-1], out=d[: flat.size - 1])
+        d[flat.size - 1 :] = 0  # 8 pad slots: the last block reads past the end
+        bounds = np.empty(2 * sel.size, dtype=np.int64)
+        bounds[0::2], bounds[1::2] = starts, starts + d_lens
+        md = np.minimum.reduceat(d, bounds)[0::2]
+        widths = bit_length((np.maximum.reduceat(d, bounds)[0::2] - md).view(np.uint64))
+        nblk = (d_lens + 7) // 8
+        boff = np.concatenate(([0], np.cumsum(_HEADER + _INT_HEAD + widths * nblk + 1)))
+        out = np.zeros(int(boff[-1]), dtype=np.uint8)
+        head = np.zeros((sel.size, _HEADER + _INT_HEAD), dtype=np.uint8)
+        head[:, 1:5] = lens[sel].astype(np.uint32)[:, None].view(np.uint8)
+        head[:, 5:13] = np.full(sel.size, 1.0)[:, None].view(np.uint8)
+        head[:, 13:21] = ints[starts][:, None].view(np.uint8)
+        head[:, 21:29] = md[:, None].view(np.uint8)
+        head[:, 29] = widths
+        _windows(out, head.shape[1])[boff[:-1]] = head.view(f"V{head.shape[1]}").ravel()
+        out[boff[1:] - 1] = _METHOD_BYTE
+        # width-sorted (u8 key: radix) blocks; a row's last block reads
+        # past its end, so its pad slots take the row's min delta, which
+        # _pack_blocks rebases to 0
+        order = np.argsort(widths.astype(np.uint8), kind="stable")
+        ws, nb, mds = widths[order], nblk[order], md[order].view(np.uint64)
+        b_off = np.concatenate(([0], np.cumsum(nb)))
+        k = np.arange(b_off[-1])  # block k is block k - b_off[row] of its row
+        blk = _windows(d, 8)[8 * k + np.repeat(starts[order] - 8 * b_off[:-1], nb)]
+        vals = blk.view(np.uint64).reshape(-1, 8)
+        pad = np.arange(8) >= (d_lens[order] - 8 * nb + 8)[:, None]
+        vals[b_off[1:] - 1] = np.where(pad, mds[:, None], vals[b_off[1:] - 1])
+        base = np.repeat(mds, nb)
+        row_dst = boff[:-1][order] + _HEADER + _INT_HEAD - ws * b_off[:-1]
+        grp = np.concatenate(([0], np.flatnonzero(np.diff(ws)) + 1, [ws.size]))
+        for a, b in zip(grp[:-1], grp[1:]):
+            w, g = int(ws[a]), slice(b_off[a], b_off[b])
+            if not w:
+                continue
+            dst = w * k[g] + np.repeat(row_dst[a:b], nb[a:b])
+            for i in range(0, dst.size, _PACK_CHUNK):
+                c = slice(i, i + _PACK_CHUNK)
+                _windows(out, w)[dst[c]] = _pack_blocks(vals[g][c], base[g][c], w)
+        ob, bo = out.tobytes(), boff.tolist()
+        for r, lo, hi in zip(sel.tolist(), bo[:-1], bo[1:]):
+            blobs[r] = ob[lo:hi]
     for r in np.flatnonzero(~row_ok):
         v = flat[offsets[r] : offsets[r + 1]]
-        if v.size == 0:
-            blobs[r] = b""
-        elif v.size == 1:
+        if v.size == 1:
             blobs[r] = v.tobytes() + bytes([0])  # Uncompressed edge rule
-        else:
+        elif v.size:
             blobs[r] = compress(v) + bytes([_METHOD_BYTE])
-    return blobs  # type: ignore[return-value]
+    return blobs
+
+
+def _windows(a: np.ndarray, n: int) -> np.ndarray:
+    """Every run of ``n`` consecutive elements of the contiguous 1-D
+    array ``a`` as one void item, a (a.size - n + 1,) view (writeable
+    when ``a`` is): a fancy index gathers or scatters whole windows."""
+    return np.ndarray(a.size - n + 1, f"V{n * a.itemsize}", a, 0, (a.itemsize,))
+
+
+def _pack_blocks(vals: np.ndarray, base: np.ndarray, w: int) -> np.ndarray:
+    """Row k of the (blocks, 8) uint64 ``vals`` less ``base[k]`` (each
+    difference < 2**w, w in 1..64) packed into w bytes, as (blocks,)
+    void items: the inverse of :func:`_unpack_blocks`.
+
+    Value j of a block sits at bit offset j*w, so it ORs into one or
+    two fixed rows of a (ceil(w/8), blocks) u64 word matrix: 8
+    shift-OR passes along the blocks, no per-bit explode. Each block's
+    first w big-endian word bytes are its MSB-first stream."""
+    words = np.zeros(((w + 7) // 8, vals.shape[0]), dtype=np.uint64)
+    col = np.empty(vals.shape[0], dtype=np.uint64)
+    for j in range(8):
+        np.subtract(vals[:, j], base, out=col)
+        q, r = divmod(j * w, 64)
+        if r + w > 64:  # straddles a word boundary: low bits open word q + 1
+            words[q + 1] |= col << np.uint64(128 - r - w)
+            words[q] |= col >> np.uint64(r + w - 64)
+        else:
+            words[q] |= col << np.uint64(64 - w - r)
+    be = words.T.astype(">u8", order="C")
+    return np.ndarray(vals.shape[0], f"V{w}", be, 0, (be.strides[0],))
 
 
 def _unpack_blocks(buf: np.ndarray, bstart: np.ndarray, w: int) -> np.ndarray:
@@ -286,18 +286,18 @@ def _unpack_blocks(buf: np.ndarray, bstart: np.ndarray, w: int) -> np.ndarray:
     8 values that start at byte offsets ``bstart`` of ``buf``.
 
     A block is w bytes and value j always sits at bit offset j*w, so one
-    (blocks, w + window) byte matrix — a sliding-window view indexed by
-    the block starts — gives each j a fixed-offset big-endian window
-    column: 8 shift-and-mask passes decode the group (the inverse of
-    pack_bits' byte-window scatter). The bytes past a block belong to
+    (blocks, w + window) byte matrix — :func:`_windows` indexed by the
+    block starts — gives each j a fixed-offset big-endian window column:
+    8 shift-and-mask passes decode the group (the inverse of
+    :func:`_pack_blocks`). The bytes past a block belong to
     the next one and are masked off. Windows are u32 while shift + w
     fits (w <= 25), u64 up to w = 57; wider widths go to unpack_bits."""
     if w > 57:
-        mat = sliding_window_view(buf, w)[bstart].ravel()
+        mat = _windows(buf, w)[bstart].view(np.uint8)
         return unpack_bits(mat, np.full(8 * bstart.size, w, np.int64)).reshape(-1, 8)
     nb = 4 if w <= 25 else 8
     wt = np.dtype(f"u{nb}").type
-    mat = sliding_window_view(buf, w + nb)[bstart]
+    mat = _windows(buf, w + nb)[bstart]
     out = np.empty((bstart.size, 8), dtype=np.uint64)
     for j in range(8):
         byte0, sh = divmod(j * w, 8)

@@ -611,3 +611,80 @@ def test_delta_batch_decode_corrupt_row_leaves_fast_path(monkeypatch, corruption
     with pytest.raises(CorruptBlobError):
         delta.decompress_batch(blobs)
     assert seen[-1] == blobs[k]
+
+
+
+def _delta_per_row_blob(v: np.ndarray, fast: bool) -> bytes:
+    """The blob the batch encoder must give one row. A fast row is the
+    mode-0, scale-1.0 layout of its ints — what delta.compress writes
+    for |v| <= 1e15 (beyond that, compress escapes values to raw f64
+    while the batch keeps mode 0 up to 2**62). Otherwise: b"" when
+    empty, the Uncompressed edge rule for one value, else
+    delta.compress plus the method byte."""
+    from tersets_spark.kernels import delta
+
+    tail = bytes([int(Method.BitPackedDeltaEncoding)])
+    if fast:
+        head = bytes([0]) + np.uint32(v.size).tobytes() + np.float64(1.0).tobytes()
+        blob = head + delta._encode_ints(v.astype(np.int64)) + tail
+        if np.abs(v).max() <= 1e15:
+            assert blob == delta.compress(v) + tail
+        return blob
+    if v.size <= 1:
+        return v.tobytes() + bytes([int(Method.Uncompressed)]) if v.size else b""
+    return delta.compress(v) + tail
+
+
+def test_delta_batch_encode_equals_per_row_rule(monkeypatch) -> None:
+    """The block-of-8 batch encoder gives every row its per-row blob on
+    fast rows of every width 0..64 with 1..8 values in the last block,
+    interleaved with rows the gate must refuse (NaN, ±inf, -0.0, ±2**62,
+    ±2**63, a fraction, a single value, an empty row); only the refused
+    rows of >= 2 values reach the single-series encoder. Rows at
+    ±(2**62 - 1024), the largest float magnitude below 2**62, stay on
+    the fast path."""
+    from tersets_spark.kernels import delta
+
+    rng = np.random.default_rng(65)
+    big = 2.0**62 - 1024
+    fast = [np.array([big, -big, big]), np.array([-big, -big + 1024]), np.array([big, big])]
+    for w in range(65):
+        fast += [_delta_width_row(rng, w, n) for n in (*range(10, 18), 200 + w)]
+    refused = [
+        np.array([1.0, np.nan, 3.0]),
+        np.array([np.inf, 1.0]),
+        np.array([2.0, -np.inf, 4.0]),
+        np.array([4.0, -0.0, 5.0]),
+        np.array([1.0, 2.0**62]),
+        np.array([-(2.0**62), 1.0]),
+        np.array([2.0**63, 0.0]),
+        np.array([0.0, -(2.0**63)]),
+        np.array([1.0, 2.5, 3.0]),
+        np.array([3.0]),
+        np.empty(0),
+    ]
+    rows = []
+    for i, r in enumerate(fast):
+        rows.append(r)
+        if i % 5 == 0:
+            rows.append(refused[(i // 5) % len(refused)])
+    blob_of = {id(r): _delta_per_row_blob(r, fast=True) for r in fast}
+    blob_of.update({id(r): _delta_per_row_blob(r, fast=False) for r in refused})
+    want = [blob_of[id(r)] for r in rows]
+    assert {b[29] for b in want if _is_fast_row(b)} == set(range(65))
+    assert sum(map(_is_fast_row, want)) == len(fast)
+
+    seen: list[np.ndarray] = []
+    real = delta.compress
+    monkeypatch.setattr(delta, "compress", lambda v: seen.append(v.copy()) or real(v))
+    # the fast rows alone, and with only 2**62 or only -2**62 past the
+    # bound, probe the batch-level range shortcut at its edges
+    for batch in (rows, fast, fast[:20] + [refused[4]], fast[:20] + [refused[5]]):
+        seen.clear()
+        flat = np.concatenate(batch)
+        offs = np.concatenate(([0], np.cumsum([r.size for r in batch]))).astype(np.int64)
+        assert delta.compress_batch(flat, offs) == [blob_of[id(r)] for r in batch]
+        slow = [r for r in batch if r.size >= 2 and any(r is x for x in refused)]
+        assert len(seen) == len(slow)
+        assert all(np.array_equal(a.view(np.uint64), b.view(np.uint64)) for a, b in zip(seen, slow))
+    assert len(rows) - len(fast) > 2 * len(refused)
