@@ -43,6 +43,7 @@ from .bitstream import (
 )
 
 _MAX_VALUE = 1e15
+_MAX_INT = int(_MAX_VALUE)
 _SCALES = 10.0 ** np.arange(0, 15)
 
 
@@ -170,9 +171,9 @@ def compress_batch(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
 
     ``flat`` is the concatenation of all series (float64), ``offsets``
     the (n_rows+1) boundaries. A row of >= 2 values, all exact int64
-    with |v| < 2**62, encodes block-of-8 in the mode-0, scale-1.0 layout
-    (byte for byte what :func:`compress` writes for |v| <= 1e15; past
-    that compress escapes values to raw f64); any other row goes to the
+    with |v| <= 1e15 (``_MAX_VALUE``, the bound of :func:`_find_scale`),
+    encodes block-of-8 in the mode-0, scale-1.0 layout, byte for byte
+    what :func:`compress` writes; any other row goes to the
     single-series encoder. Every blob ends in its method byte.
 
     The mirror of :func:`decompress_batch`: one full-length diff; each
@@ -188,11 +189,11 @@ def compress_batch(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
         ints = flat.astype(np.int64)
     # BITWISE round-trip gate, as in the single-series _find_scale: the
     # int must reproduce the f64 bit pattern (NaN, -0.0 and fractions
-    # escape). The strict |v| < 2**62 bound is one unsigned compare, run
+    # escape). Its |v| <= _MAX_VALUE bound is one unsigned compare, run
     # only when the batch's int range reaches past it
     refused = ints.astype(np.float64).view(np.uint64) != flat.view(np.uint64)
-    if ints.size and (ints.min() <= -(2**62) or ints.max() >= 2**62):
-        refused |= ints.view(np.uint64) + np.uint64(2**62 - 1) > np.uint64(2**63 - 2)
+    if ints.size and (ints.min() < -_MAX_INT or ints.max() > _MAX_INT):
+        refused |= ints.view(np.uint64) + np.uint64(_MAX_INT) > np.uint64(2 * _MAX_INT)
     row_ok = lens >= 2
     row_ok[np.searchsorted(offsets, np.flatnonzero(refused), side="right") - 1] = False
     sel = np.flatnonzero(row_ok)

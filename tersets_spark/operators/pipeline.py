@@ -33,11 +33,15 @@ shuffle); they yield one set of tier rows each.
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -144,6 +148,25 @@ def _fused_batch(
     )
 
 
+def _drop_spark_zip_importers(root: str) -> None:
+    """Delete from ``sys.path_importer_cache`` the zip importers of
+    archives outside ``root``, the worker's SparkFiles directory.
+
+    Every PySpark task starts with ``importlib.invalidate_caches()``, and
+    on CPython 3.11 a cached ``zipimporter`` answers it by re-reading
+    its archive's whole directory: once for the spark-core jar (5k
+    entries), once for its ``org`` sub-path and once per cached
+    pyspark.zip package path, 0.2-0.3 s per task. Those archives stay
+    unchanged while the worker lives, and an import that needs a dropped
+    importer again rebuilds it from zipimport's directory cache without
+    reading the archive. Archives under ``root`` (``--py-files``,
+    ``addPyFile``) can change between tasks and keep the invalidation."""
+    inside = os.path.join(root, "")
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and not finder.archive.startswith(inside):
+            del sys.path_importer_cache[path]
+
+
 def fused_compress_rollup(
     df: DataFrame,
     method: Method = Method.BitPackedDeltaEncoding,
@@ -168,9 +191,14 @@ def fused_compress_rollup(
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         m = Method(method_code)
-        for batch in batches:
-            if batch.num_rows:
-                yield _fused_batch(batch, m, cfg, chunk)
+        try:
+            for batch in batches:
+                if batch.num_rows:
+                    yield _fused_batch(batch, m, cfg, chunk)
+        finally:
+            # the worker's next task then skips re-reading Spark's own
+            # archives; runs however the task ends
+            _drop_spark_zip_importers(SparkFiles.getRootDirectory())
 
     return df.select("doc_id", "tokens").mapInArrow(kernel, schema=FUSED_SCHEMA)
 
@@ -195,33 +223,26 @@ def flagship_summary(fused: DataFrame) -> DataFrame:
     grouping ids of ``ROLLUP(doc_id, 1d, 1h, 1m)``: 0, 1 and 3 carry
     the 1m, 1h and 1d row counts; 15, the grand total, carries 1 when
     any tier row exists. Every row carries the global verify verdict,
-    compressed bytes and token count. Empty input gives no rows."""
+    compressed bytes and token count. Empty input gives no rows.
+
+    Built from SQL text, which the driver hands to Spark's parser in a
+    few py4j calls: the nested ``F.*`` build it replaces sent about 500
+    more py4j commands per query."""
     n = len(_TIER_NAMES)
-    totals = fused.agg(
-        F.count("*").alias("chunks"),
-        F.min(F.col("roundtrip_ok").cast("int")).alias("all_ok"),
-        F.sum("bytes").alias("bytes"),
-        F.sum("n_values").alias("n_values"),
-        *[F.sum(F.size(f"vcount_{t}")).alias(f"rows{i}") for i, t in enumerate(_TIER_NAMES)],
+    totals = fused.selectExpr(
+        "count(*) AS chunks",
+        "min(CAST(roundtrip_ok AS INT)) AS all_ok",
+        "sum(bytes) AS bytes",
+        "sum(n_values) AS n_values",
+        *[f"sum(size(vcount_{t})) AS rows{i}" for i, t in enumerate(_TIER_NAMES)],
     )
-    gids = [((1 << i) - 1, F.col(f"rows{i}")) for i in range(n)]
-    gids.append(((2 << n) - 1, (F.col("rows0") > 0).cast("long")))
-    return totals.filter(F.col("chunks") > 0).select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(gid).cast("long").alias("gid"),
-                        rows.alias("rows"),
-                        "all_ok",
-                        "bytes",
-                        "n_values",
-                    )
-                    for gid, rows in gids
-                ]
-            )
-        )
+    gids = [((1 << i) - 1, f"rows{i}") for i in range(n)]
+    gids.append(((2 << n) - 1, "CAST(rows0 > 0 AS BIGINT)"))
+    structs = ", ".join(
+        f"struct(CAST({gid} AS BIGINT) AS gid, {rows} AS rows, all_ok, bytes, n_values)"
+        for gid, rows in gids
     )
+    return totals.where("chunks > 0").selectExpr(f"inline(array({structs}))")
 
 
 def blocks_from_fused(fused: DataFrame, method: Method) -> DataFrame:

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compress import reject_null_tokens
+
 #: tier name -> bucket width in positions (or seconds for event time)
 TIERS = {"1m": 60, "1h": 3600, "1d": 86400}
 
@@ -42,10 +44,12 @@ def rollup_tokens_base(df: DataFrame, width: int = 60) -> DataFrame:
 
     Vectorized across the whole Arrow batch: concatenate the batch's
     token arrays, build bucket boundaries for every row at once, and run
-    four ``np.*.reduceat`` passes — O(1) Python per batch."""
+    four ``np.*.reduceat`` passes — O(1) Python per batch. A null
+    ``tokens`` row raises ``ValueError`` naming its ``doc_id``."""
 
     def agg_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            reject_null_tokens(pdf["doc_id"], pdf["tokens"])
             arrays = [np.asarray(t, dtype=np.float64) for t in pdf["tokens"]]
             if not arrays:
                 continue

@@ -519,7 +519,9 @@ def _delta_decode_batch() -> tuple[list[bytes], np.ndarray, np.ndarray]:
     """compress_batch blobs with fast rows at every width 0..64 and
     lengths that leave 1..8 values in the last block, interleaved with
     rows the fast path must refuse: mixed mode (NaN, -0.0), a non-unit
-    scale, a single value and an empty row."""
+    scale, a single value and an empty row. Rows past 1e15 (widths
+    53..64) take the mode-0 layout that batch encoders wrote up to 2**62
+    before the 1e15 gate: stored blocks keep such blobs."""
     from tersets_spark.kernels import delta
 
     rng = np.random.default_rng(64)
@@ -537,6 +539,9 @@ def _delta_decode_batch() -> tuple[list[bytes], np.ndarray, np.ndarray]:
     flat = np.concatenate(rows)
     offs = np.concatenate(([0], np.cumsum([r.size for r in rows]))).astype(np.int64)
     blobs = delta.compress_batch(flat, offs)
+    for i, r in enumerate(rows):
+        if r.size >= 2 and np.abs(r).max() > 1e15:
+            blobs[i] = _delta_mode0_blob(r)
     assert {b[29] for b in blobs if _is_fast_row(b)} == set(range(65))
     return blobs, flat, offs
 
@@ -614,42 +619,43 @@ def test_delta_batch_decode_corrupt_row_leaves_fast_path(monkeypatch, corruption
 
 
 
-def _delta_per_row_blob(v: np.ndarray, fast: bool) -> bytes:
-    """The blob the batch encoder must give one row. A fast row is the
-    mode-0, scale-1.0 layout of its ints — what delta.compress writes
-    for |v| <= 1e15 (beyond that, compress escapes values to raw f64
-    while the batch keeps mode 0 up to 2**62). Otherwise: b"" when
-    empty, the Uncompressed edge rule for one value, else
-    delta.compress plus the method byte."""
+def _delta_mode0_blob(v: np.ndarray) -> bytes:
+    """The mode-0, scale-1.0 delta layout of an exact-int row, method
+    byte included: what delta.compress writes for |v| <= 1e15."""
     from tersets_spark.kernels import delta
 
+    head = bytes([0]) + np.uint32(v.size).tobytes() + np.float64(1.0).tobytes()
     tail = bytes([int(Method.BitPackedDeltaEncoding)])
-    if fast:
-        head = bytes([0]) + np.uint32(v.size).tobytes() + np.float64(1.0).tobytes()
-        blob = head + delta._encode_ints(v.astype(np.int64)) + tail
-        if np.abs(v).max() <= 1e15:
-            assert blob == delta.compress(v) + tail
-        return blob
+    return head + delta._encode_ints(v.astype(np.int64)) + tail
+
+
+def _delta_per_row_blob(v: np.ndarray) -> bytes:
+    """The blob the batch encoder must give one row: b"" when empty, the
+    Uncompressed edge rule for one value, else delta.compress plus the
+    method byte."""
+    from tersets_spark.kernels import delta
+
     if v.size <= 1:
         return v.tobytes() + bytes([int(Method.Uncompressed)]) if v.size else b""
-    return delta.compress(v) + tail
+    return delta.compress(v) + bytes([int(Method.BitPackedDeltaEncoding)])
 
 
 def test_delta_batch_encode_equals_per_row_rule(monkeypatch) -> None:
     """The block-of-8 batch encoder gives every row its per-row blob on
-    fast rows of every width 0..64 with 1..8 values in the last block,
+    fast rows of every width 0..52 with 1..8 values in the last block,
     interleaved with rows the gate must refuse (NaN, ±inf, -0.0, ±2**62,
-    ±2**63, a fraction, a single value, an empty row); only the refused
-    rows of >= 2 values reach the single-series encoder. Rows at
-    ±(2**62 - 1024), the largest float magnitude below 2**62, stay on
-    the fast path."""
+    ±2**63, a fraction, a single value, an empty row, and exact ints
+    past ±1e15, which delta.compress escapes to raw f64); only the
+    refused rows of >= 2 values reach the single-series encoder. Rows
+    at ±1e15 stay on the fast path."""
     from tersets_spark.kernels import delta
 
     rng = np.random.default_rng(65)
-    big = 2.0**62 - 1024
-    fast = [np.array([big, -big, big]), np.array([-big, -big + 1024]), np.array([big, big])]
-    for w in range(65):
+    edge, big = 1e15, 2.0**62 - 1024
+    fast = [np.array([edge, -edge, edge]), np.array([-edge, -edge + 1024]), np.array([edge, edge])]
+    for w in range(53):
         fast += [_delta_width_row(rng, w, n) for n in (*range(10, 18), 200 + w)]
+    above, below = np.array([1.0, edge + 1]), np.array([-(edge + 1), 1.0])
     refused = [
         np.array([1.0, np.nan, 3.0]),
         np.array([np.inf, 1.0]),
@@ -662,24 +668,29 @@ def test_delta_batch_encode_equals_per_row_rule(monkeypatch) -> None:
         np.array([1.0, 2.5, 3.0]),
         np.array([3.0]),
         np.empty(0),
+        above,
+        below,
+        np.array([big, -big, big]),
+        np.array([-big, -big + 1024]),
+        *[_delta_width_row(rng, w, 17) for w in range(53, 65)],
     ]
     rows = []
     for i, r in enumerate(fast):
         rows.append(r)
         if i % 5 == 0:
             rows.append(refused[(i // 5) % len(refused)])
-    blob_of = {id(r): _delta_per_row_blob(r, fast=True) for r in fast}
-    blob_of.update({id(r): _delta_per_row_blob(r, fast=False) for r in refused})
+    blob_of = {id(r): _delta_per_row_blob(r) for r in fast + refused}
+    assert all(blob_of[id(r)] == _delta_mode0_blob(r) for r in fast)
     want = [blob_of[id(r)] for r in rows]
-    assert {b[29] for b in want if _is_fast_row(b)} == set(range(65))
+    assert {b[29] for b in want if _is_fast_row(b)} == set(range(53))
     assert sum(map(_is_fast_row, want)) == len(fast)
 
     seen: list[np.ndarray] = []
     real = delta.compress
     monkeypatch.setattr(delta, "compress", lambda v: seen.append(v.copy()) or real(v))
-    # the fast rows alone, and with only 2**62 or only -2**62 past the
-    # bound, probe the batch-level range shortcut at its edges
-    for batch in (rows, fast, fast[:20] + [refused[4]], fast[:20] + [refused[5]]):
+    # the fast rows alone, and with only 1e15 + 1 or only -(1e15 + 1)
+    # past the bound, probe the batch-level range shortcut at its edges
+    for batch in (rows, fast, fast[:20] + [above], fast[:20] + [below]):
         seen.clear()
         flat = np.concatenate(batch)
         offs = np.concatenate(([0], np.cumsum([r.size for r in batch]))).astype(np.int64)

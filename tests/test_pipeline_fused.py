@@ -3,6 +3,12 @@ compress / rollup operators."""
 
 from __future__ import annotations
 
+import importlib
+import sys
+import threading
+import zipfile
+import zipimport
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -11,6 +17,7 @@ from pyspark.sql import functions as F
 from tersets_spark.methods import Method
 from tersets_spark.operators.compress import compress_blocks, decompress_blocks, reassemble
 from tersets_spark.operators.pipeline import (
+    _drop_spark_zip_importers,
     _fused_batch,
     blocks_from_fused,
     flagship_summary,
@@ -137,3 +144,72 @@ def test_null_tokens_row_fails_loudly(spark):
     toks = spark.createDataFrame([("a", [1, 2]), ("b", None), ("c", [3])], TOKENS)
     with pytest.raises(Exception, match="null tokens for doc_id 'b'"):
         fused_compress_rollup(toks.coalesce(1)).collect()
+
+
+def test_drop_spark_zip_importers_keeps_sparkfiles_archives(tmp_path, monkeypatch):
+    """The fused kernel's task-end clean-up: zip importers of archives
+    outside the SparkFiles root leave the importer cache, those under it
+    stay, and a later import from a dropped archive rebuilds its
+    importer from zipimport's directory cache without reading the
+    archive again."""
+    root = tmp_path / "userFiles"
+    root.mkdir()
+    zips = {}
+    for pkg, where in (("fused_outside_pkg", tmp_path), ("fused_inside_pkg", root)):
+        path = where / f"{pkg}.zip"
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr(f"{pkg}/__init__.py", "")
+            zf.writestr(f"{pkg}/one.py", "X = 1\n")
+            zf.writestr(f"{pkg}/two.py", "X = 2\n")
+        zips[pkg] = str(path)
+        monkeypatch.syspath_prepend(str(path))
+
+    def cached(pkg):
+        return [
+            p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter) and p.startswith(zips[pkg])
+        ]
+
+    try:
+        for pkg in zips:
+            importlib.import_module(f"{pkg}.one")
+        kept = cached("fused_inside_pkg")
+        assert cached("fused_outside_pkg") and kept
+        _drop_spark_zip_importers(str(root))
+        assert cached("fused_outside_pkg") == []
+        assert cached("fused_inside_pkg") == kept
+        reads = []
+        real = zipimport._read_directory
+        monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+        assert importlib.import_module("fused_outside_pkg.two").X == 2
+        assert reads == []
+    finally:
+        for name in [m for m in sys.modules if m.startswith(tuple(zips))]:
+            del sys.modules[name]
+        for p in [p for p in sys.path_importer_cache if p.startswith(str(tmp_path))]:
+            del sys.path_importer_cache[p]
+
+
+def test_flagship_build_py4j_commands(spark, monkeypatch):
+    """Building the flagship query is a fixed driver-side cost of every
+    run: after one warm-up build it sends at most a quarter of the 558
+    py4j commands it sent when flagship_summary was built from nested
+    ``F.*`` calls (its SQL-text build sends 65). Commands from other
+    threads, such as py4j's object finalizer, are not counted."""
+    toks = spark.createDataFrame([("a", [1, 2, 3])], TOKENS)
+
+    def build():
+        return flagship_summary(fused_compress_rollup(toks, Method.BitPackedDeltaEncoding))
+
+    build()
+    client = spark.sparkContext._gateway._gateway_client
+    real, me, sent = client.send_command, threading.get_ident(), []
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build()
+    assert 0 < len(sent) <= 558 // 4, len(sent)

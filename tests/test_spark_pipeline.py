@@ -20,7 +20,7 @@ from tersets_spark.operators.compress import (
 )
 from tersets_spark.operators.gapfill import gapfill
 from tersets_spark.operators.retention import prune_tier, split_aged
-from tersets_spark.operators.rollup import rollup_events, tier_rollups
+from tersets_spark.operators.rollup import rollup_events, rollup_tokens_base, tier_rollups
 from tersets_spark.sources.synth import synth_tokens
 
 N_DOCS = 60
@@ -158,6 +158,19 @@ def test_split_aged_rejects_broken_input_contract(spark, bad, message):
     for out in (kept, aged):
         with pytest.raises(Exception, match=message):
             out.collect()
+
+
+@pytest.mark.parametrize(
+    "op", [compress_blocks, rollup_tokens_base], ids=["compress_blocks", "rollup_tokens_base"]
+)
+def test_unfused_kernels_reject_null_tokens(spark, op):
+    """A null tokens row fails naming its doc_id, as in the fused kernel,
+    instead of deep inside numpy with no row named."""
+    df = spark.createDataFrame(
+        [("a", [1, 2, 3, 4]), ("b", None), ("c", [7])], "doc_id string, tokens array<int>"
+    )
+    with pytest.raises(Exception, match="null tokens for doc_id 'b'"):
+        op(df.coalesce(1)).collect()
 
 
 def test_prune_tier(spark):
