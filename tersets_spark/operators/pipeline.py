@@ -225,9 +225,9 @@ def flagship_summary(fused: DataFrame) -> DataFrame:
     any tier row exists. Every row carries the global verify verdict,
     compressed bytes and token count. Empty input gives no rows.
 
-    Built from SQL text, which the driver hands to Spark's parser in a
-    few py4j calls: the nested ``F.*`` build it replaces sent about 500
-    more py4j commands per query."""
+    Built from SQL text: Spark parses each expression list in one py4j
+    call, where every ``F.*`` call would cost the driver one or more
+    round trips, and the build is paid again by every query."""
     n = len(_TIER_NAMES)
     totals = fused.selectExpr(
         "count(*) AS chunks",
