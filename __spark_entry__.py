@@ -463,12 +463,12 @@ _EXTRACT_EDIT_ORACLE = f"""
 """
 
 
-def _tier_rollup_tokens_query(width: int, tokenizer):
+def _tier_rollup_tokens_query(tokenizer):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         _prep(spark)
         from tersets_spark.operators.rollup import rollup_tokens_base
 
-        out = rollup_tokens_base(tokenizer(spark, sf_dir), width)
+        out = rollup_tokens_base(tokenizer(spark, sf_dir))
         return out.select(
             "doc_id",
             "bucket",
@@ -505,10 +505,11 @@ def _fused_tier_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated by the same oracle as the unfused chars rollup: identical tier
     rows must fall out of the fused partials."""
     _prep(spark)
-    from tersets_spark.operators.pipeline import fused_compress_rollup, tier_from_fused
+    from tersets_spark.operators.pipeline import fused_compress_rollup
+    from tersets_spark.operators.rollup import tier_table
 
     fused = fused_compress_rollup(_char_tokens(spark, sf_dir))
-    return tier_from_fused(fused, "1m").select(
+    return tier_table(fused, "1m").select(
         "doc_id",
         "bucket",
         "vmin",
@@ -806,7 +807,7 @@ def _tier_prune_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tersets_spark.operators.retention import prune_tier
     from tersets_spark.operators.rollup import rollup_tokens_base
 
-    roll = rollup_tokens_base(_char_tokens(spark, sf_dir), 60).select(
+    roll = rollup_tokens_base(_char_tokens(spark, sf_dir)).select(
         "doc_id", "bucket", "vmin", "vmax", "vcount"
     )
     return prune_tier(roll, 3).select("doc_id", "bucket", "vmin", "vmax", "vcount")
@@ -840,7 +841,7 @@ def _tier_compact_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame
     from tersets_spark.operators.rollup import rollup_tokens_base
 
     roll = (
-        rollup_tokens_base(_char_tokens(spark, sf_dir), 60)
+        rollup_tokens_base(_char_tokens(spark, sf_dir))
         .select(
             "doc_id",
             "bucket",
@@ -2641,7 +2642,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     toks = _char_tokens(spark, sf_dir)
     rt = roundtrip_verify(toks, Method.BitPackedDeltaEncoding)
-    roll = rollup_tokens_base(toks, 60)
+    roll = rollup_tokens_base(toks)
     summary = (
         rt.agg(
             F.count("*").alias("n_docs"),
@@ -2683,8 +2684,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # timestamp-delta leg (was 5 rows; frees budget for
         # dedup_fuzzy_groups / extract_edit_rebuild)
         "float_roundtrip_catalog": _float_roundtrip_catalog_query,
-        "tier_rollup_words_1m": _tier_rollup_tokens_query(60, _word_tokens),
-        "tier_rollup_chars_1m": _tier_rollup_tokens_query(60, _char_tokens),
+        "tier_rollup_words_1m": _tier_rollup_tokens_query(_word_tokens),
+        "tier_rollup_chars_1m": _tier_rollup_tokens_query(_char_tokens),
         "fused_tier_rollup_1m": _fused_tier_rollup_query,
         "dedup_exact": _dedup_exact_query,
         "minhash_jaccard_dups": minhash_pairs,

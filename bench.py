@@ -351,7 +351,7 @@ def main() -> None:
     from tersets_spark.operators.rollup import rollup_tokens_base
 
     _tier_roll = rollup_tokens_base(
-        synth_tokens(spark, n_docs, partitions=parts), 60
+        synth_tokens(spark, n_docs, partitions=parts)
     ).select(
         "doc_id",
         "bucket",

@@ -40,13 +40,11 @@ def main(argv: list[str] | None = None) -> None:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import functions as F
-
     from tersets_spark.methods import Method
     from tersets_spark.operators.compress import compress_blocks
     from tersets_spark.operators.lineage import append_metrics, run_with_lineage
     from tersets_spark.operators.retention import split_aged
-    from tersets_spark.operators.rollup import TIERS, rollup_tokens_base, tiers_from_base
+    from tersets_spark.operators.rollup import TIER_NAMES, TIERS, tier_arrays, tier_table
     from tersets_spark.session import get_spark
     from tersets_spark.sources.synth import synth_tokens
 
@@ -56,6 +54,9 @@ def main(argv: list[str] | None = None) -> None:
         "chimp128": Method.Chimp128,
         "rle": Method.RunLengthEncoding,
     }[args.method]
+    tiers = args.tiers.split(",")
+    if not set(tiers) <= set(TIERS):
+        p.error(f"--tiers takes names from {','.join(TIERS)}")
     spark = get_spark("tersets_compact", cores=args.cores)
     sc = spark.sparkContext
     t0 = time.time()
@@ -64,18 +65,22 @@ def main(argv: list[str] | None = None) -> None:
         if args.input
         else synth_tokens(spark, args.n_docs)
     )
-    tiers = {t: TIERS[t] for t in args.tiers.split(",")}
-    # the finest tier is held in memory: the coarser tiers and the token
-    # count re-aggregate it instead of scanning the input again
-    base = rollup_tokens_base(df, min(tiers.values())).persist()
+    # every tier of every doc, one row per doc, held in memory: each tier
+    # table is one explode of it and the token count one sum over it,
+    # with no second scan of the input and no exchange
+    arrays = tier_arrays(df).persist()
 
     def write_tiers() -> int:
         sc.setJobDescription("tiers")
-        for name, roll in tiers_from_base(base, tiers).items():
-            roll.write.mode("overwrite").parquet(f"{args.out}/tier_{name}")
-        total = base.agg(F.sum("vcount")).collect()[0][0] or 0
-        base.unpersist()
-        return total
+        for name in tiers:
+            tier_table(arrays, name).selectExpr(
+                "doc_id", "bucket", "vmin", "vmax", "vsum / vcount AS vmean", "vcount"
+            ).write.mode("overwrite").parquet(f"{args.out}/tier_{name}")
+        total = arrays.selectExpr(
+            f"sum(aggregate(vcount_{TIER_NAMES[-1]}, 0L, (a, b) -> a + b))"
+        ).first()[0]
+        arrays.unpersist()
+        return total or 0
 
     kept, aged = split_aged(df, args.raw_retention)
 

@@ -24,7 +24,7 @@ tiers itself and no downstream step merges partials:
   bucket. The finest tier reduces the tokens, each coarser tier the
   next-finer tier's partials (the widths nest).
 * downstream: blocks table = projection; a tier table = one explode
-  (:func:`tier_from_fused`); the flagship = one global aggregate
+  (``rollup.tier_table``); the flagship = one global aggregate
   (:func:`flagship_summary`). None of them shuffles by key.
 
 Duplicate ``doc_id`` rows are not merged (rejecting them needs a
@@ -40,7 +40,6 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark import SparkFiles
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,51 +48,13 @@ from ..kernels.batch import compress_batch, decompress_batch
 from ..kernels.bitstream import segment_intra_indices
 from ..methods import Method
 from .compress import CHUNK
-from .rollup import TIERS
+from .rollup import TIER_FIELDS, TIER_NAMES, flat_tokens, tier_partials
 
-#: tier names, finest first
-_TIER_NAMES = sorted(TIERS, key=TIERS.get)
-_STATS = ("vmin", "vmax", "vsum", "vcount")
-_CHUNK_FIELDS = (
+FUSED_SCHEMA = (
     "doc_id string, chunk_id int, first_pos long, n_values int, "
-    "blob binary, bytes int, roundtrip_ok boolean"
-)
-FUSED_SCHEMA = ", ".join(
-    [_CHUNK_FIELDS]
-    + [
-        f"{s}_{t} array<{'long' if s == 'vcount' else 'double'}>"
-        for t in _TIER_NAMES
-        for s in _STATS
-    ]
+    "blob binary, bytes int, roundtrip_ok boolean, " + TIER_FIELDS
 )
 _NAMES = [f.split()[0] for f in FUSED_SCHEMA.split(", ")]
-
-
-def _tiers(fflat: np.ndarray, row_off: np.ndarray) -> list[tuple[np.ndarray, list]]:
-    """Per tier (finest first): the per-doc offsets into its partials
-    and the partials ``[vmin, vmax, vsum, vcount]``, doc after doc.
-
-    A tier's buckets tile its source (tokens, then the next-finer
-    tier's partials) with no gap, so ``reduceat`` over the bucket
-    starts reduces each bucket exactly."""
-    out = []
-    src, off, prev_w = [fflat] * 3 + [None], row_off, 1
-    for name in _TIER_NAMES:
-        step = TIERS[name] // prev_w
-        n = (np.diff(off) + step - 1) // step
-        starts = np.repeat(off[:-1], n) + segment_intra_indices(n) * step
-        part = [
-            np.minimum.reduceat(src[0], starts),
-            np.maximum.reduceat(src[1], starts),
-            np.add.reduceat(src[2], starts),
-            np.diff(starts, append=fflat.size)
-            if src[3] is None
-            else np.add.reduceat(src[3], starts),
-        ]
-        off = np.concatenate(([0], np.cumsum(n)))
-        out.append((off, part))
-        src, prev_w = part, TIERS[name]
-    return out
 
 
 def _fused_batch(
@@ -101,13 +62,8 @@ def _fused_batch(
 ) -> pa.RecordBatch:
     """The kernel on one ``(doc_id, tokens)`` Arrow batch: FUSED_SCHEMA
     rows, one per chunk (an empty doc has one empty chunk)."""
-    doc_col, tok_col = batch.column(0), batch.column(1)
-    if tok_col.null_count:
-        row = int(np.flatnonzero(tok_col.is_null().to_numpy(zero_copy_only=False))[0])
-        raise ValueError(f"null tokens for doc_id {doc_col[row].as_py()!r}")
-    lens = np.asarray(pc.list_value_length(tok_col), dtype=np.int64)
-    fflat = tok_col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    row_off = np.concatenate(([0], np.cumsum(lens)))
+    fflat, row_off = flat_tokens(batch)
+    lens = np.diff(row_off)
     # --- per-chunk compression + in-kernel round-trip verify ---
     n_chunks = np.maximum((lens + chunk - 1) // chunk, 1)
     intra_c = segment_intra_indices(n_chunks)
@@ -130,12 +86,12 @@ def _fused_batch(
     list_row = np.append(rows_of_chunk + (intra_c > 0), batch.num_rows)
     tier_cols = [
         pa.ListArray.from_arrays(off[list_row], pa.array(p))
-        for off, part in _tiers(fflat, row_off)
+        for off, part in tier_partials(fflat, row_off)
         for p in part
     ]
     return pa.RecordBatch.from_arrays(
         [
-            doc_col.take(pa.array(rows_of_chunk)),
+            batch.column(0).take(pa.array(rows_of_chunk)),
             pa.array(intra_c.astype(np.int32)),
             pa.array(intra_c * chunk),
             pa.array(n_values.astype(np.int32)),
@@ -184,8 +140,9 @@ def fused_compress_rollup(
     tier partials come from batched ``reduceat`` — the Arrow->pandas
     list-column conversion (measured at >50% of the pass) is skipped
     entirely. Chunking happens in-kernel at the same deterministic CHUNK
-    boundaries as operators.compress. A null ``tokens`` row raises
-    ``ValueError`` naming its ``doc_id``."""
+    boundaries as operators.compress. A null ``doc_id`` raises
+    ``ValueError``, and so does a null ``tokens`` row, naming its
+    ``doc_id`` (``rollup.flat_tokens``)."""
     method_code = int(method)
     cfg = dict(config or {})
 
@@ -203,20 +160,6 @@ def fused_compress_rollup(
     return df.select("doc_id", "tokens").mapInArrow(kernel, schema=FUSED_SCHEMA)
 
 
-def tier_from_fused(fused: DataFrame, tier: str) -> DataFrame:
-    """One rollup tier, ``(doc_id, bucket, vmin, vmax, vsum, vcount)``:
-    the tier's partial arrays exploded, one row per bucket. The partials
-    are already whole per doc, so nothing is grouped or shuffled."""
-    cols = [f"{s}_{tier}" for s in _STATS]
-    return fused.select(
-        "doc_id", F.posexplode(F.arrays_zip(*cols)).alias("bucket", "z")
-    ).select(
-        "doc_id",
-        F.col("bucket").cast("long").alias("bucket"),
-        *[F.col(f"z.{c}").alias(s) for c, s in zip(cols, _STATS)],
-    )
-
-
 def flagship_summary(fused: DataFrame) -> DataFrame:
     """ONE-action flagship from one global aggregate (no key shuffle):
     rows ``(gid, rows, all_ok, bytes, n_values)``. ``gid`` keeps the
@@ -228,13 +171,13 @@ def flagship_summary(fused: DataFrame) -> DataFrame:
     Built from SQL text: Spark parses each expression list in one py4j
     call, where every ``F.*`` call would cost the driver one or more
     round trips, and the build is paid again by every query."""
-    n = len(_TIER_NAMES)
+    n = len(TIER_NAMES)
     totals = fused.selectExpr(
         "count(*) AS chunks",
         "min(CAST(roundtrip_ok AS INT)) AS all_ok",
         "sum(bytes) AS bytes",
         "sum(n_values) AS n_values",
-        *[f"sum(size(vcount_{t})) AS rows{i}" for i, t in enumerate(_TIER_NAMES)],
+        *[f"sum(size(vcount_{t})) AS rows{i}" for i, t in enumerate(TIER_NAMES)],
     )
     gids = [((1 << i) - 1, f"rows{i}") for i in range(n)]
     gids.append(((2 << n) - 1, "CAST(rows0 > 0 AS BIGINT)"))

@@ -22,54 +22,36 @@ from tersets_spark.operators.pipeline import (
     blocks_from_fused,
     flagship_summary,
     fused_compress_rollup,
-    tier_from_fused,
 )
-from tersets_spark.operators.rollup import TIERS, tier_rollups
+from tersets_spark.operators.rollup import TIERS, tier_table
 from tersets_spark.sources.synth import synth_tokens
+from tier_oracle import edge_docs, numpy_tiers, tier_rows
 
 TOKENS = "doc_id string, tokens array<int>"
 
 
-def _edge_docs(spark):
-    """An empty doc, one shorter than a 1m bucket and one longer than a
-    1d bucket, next to the synthetic table."""
-    rng = np.random.default_rng(7)
-    edge = spark.createDataFrame(
-        [
-            ("edge_empty", []),
-            ("edge_short", rng.integers(0, 50_000, 37).tolist()),
-            ("edge_long", rng.integers(0, 131_072, 90_001).tolist()),
-        ],
-        TOKENS,
-    )
-    return synth_tokens(spark, 40, max_len=9000).select("doc_id", "tokens").unionByName(edge)
-
-
 def test_fused_matches_separate_operators(spark):
-    toks = _edge_docs(spark).persist()
+    toks = (
+        synth_tokens(spark, 40, max_len=9000)
+        .select("doc_id", "tokens")
+        .unionByName(edge_docs(spark))
+        .persist()
+    )
     fused = fused_compress_rollup(toks, Method.BitPackedDeltaEncoding, chunk=1000).persist()
     # 1) every chunk round-trips in-kernel
     assert fused.filter(~F.col("roundtrip_ok")).count() == 0
-    # 2) every fused tier == the reference tier rollup, row for row
-    ref = tier_rollups(toks)
+    # 2) every fused tier == the per-doc numpy window slices, row for row
+    ref = numpy_tiers((r.doc_id, r.tokens) for r in toks.collect())
     counts = {}
     for name in TIERS:
-        a = tier_from_fused(fused, name).orderBy("doc_id", "bucket").collect()
-        b = ref[name].orderBy("doc_id", "bucket").collect()
-        assert len(a) == len(b) > 0, name
-        for ra, rb in zip(a, b):
-            assert (ra.doc_id, ra.bucket, ra.vmin, ra.vmax, ra.vcount) == (
-                rb.doc_id, rb.bucket, rb.vmin, rb.vmax, rb.vcount
-            ), name
-            assert ra.vsum / ra.vcount == rb.vmean, name
-        counts[name] = len(b)
-        if name == "1d":  # edge_long spans two days
-            assert [r.bucket for r in a if r.doc_id == "edge_long"] == [0, 1]
+        assert tier_rows(tier_table(fused, name)) == ref[name], name
+        counts[name] = len(ref[name])
+    assert [b for d, b in ref["1d"] if d == "edge_long"] == [0, 1]  # two days
     # 3) the flagship's four rows == values derived from the reference
     want_bytes = compress_blocks(toks, Method.BitPackedDeltaEncoding, chunk=1000).agg(
         F.sum("bytes")
     ).first()[0]
-    n_values = ref["1m"].agg(F.sum("vcount")).first()[0]
+    n_values = sum(n for *_, n in ref["1m"].values())
     got = {r.gid: r.asDict() for r in flagship_summary(fused).collect()}
     rows = {0: counts["1m"], 1: counts["1h"], 3: counts["1d"], 15: 1}
     assert got == {

@@ -63,6 +63,23 @@ def test_flagship_single_exchange(spark):
     assert plan.count("Exchange") == 1, plan  # Exchange SinglePartition
 
 
+def test_job_tier_tables_have_no_exchange(spark):
+    """jobs/compact.py writes each tier as one explode of the persisted
+    tier arrays: one mapInArrow kernel upstream, no exchange and no
+    mapInPandas pass."""
+    from tersets_spark.operators.rollup import TIERS, tier_arrays, tier_table
+    from tersets_spark.sources.synth import synth_tokens
+
+    arrays = tier_arrays(synth_tokens(spark, 8, max_len=500)).persist()
+    for name in TIERS:
+        plan = _plan(tier_table(arrays, name))
+        assert "InMemoryTableScan" in plan, plan
+        assert "Exchange" not in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan, plan
+    arrays.unpersist()
+
+
 def test_ann_broadcasts_query_side(spark):
     from tersets_spark.operators.similarity import brute_topk_sql
 

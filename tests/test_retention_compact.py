@@ -12,7 +12,7 @@ from tersets_spark.sources.synth import synth_tokens
 
 def test_compact_restore_roundtrip(spark):
     toks = synth_tokens(spark, 25, max_len=6000)
-    rollup = rollup_tokens_base(toks, 60).select(
+    rollup = rollup_tokens_base(toks).select(
         "doc_id",
         "bucket",
         "vmin",

@@ -7,7 +7,6 @@ call) are the single-node oracle; Spark output must match exactly.
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,8 +19,16 @@ from tersets_spark.operators.compress import (
 )
 from tersets_spark.operators.gapfill import gapfill
 from tersets_spark.operators.retention import prune_tier, split_aged
-from tersets_spark.operators.rollup import rollup_events, rollup_tokens_base, tier_rollups
+from tersets_spark.operators.pipeline import fused_compress_rollup
+from tersets_spark.operators.rollup import (
+    TIERS,
+    rollup_events,
+    rollup_tokens_base,
+    tier_arrays,
+    tier_table,
+)
 from tersets_spark.sources.synth import synth_tokens
+from tier_oracle import edge_docs, numpy_tiers, tier_rows
 
 N_DOCS = 60
 
@@ -71,21 +78,18 @@ def test_chunking_boundaries(spark, tokens_df):
 
 
 def test_tier_rollups_match_numpy_oracle(spark, tokens_df):
-    tiers = tier_rollups(tokens_df, {"1m": 60, "1h": 3600})
-    raw = {r.doc_id: np.array(r.tokens, dtype=np.float64) for r in tokens_df.collect()}
-    for name, width in [("1m", 60), ("1h", 3600)]:
-        rows = tiers[name].collect()
-        seen: dict[str, set[int]] = {}
-        for r in rows:
-            v = raw[r.doc_id]
-            seg = v[r.bucket * width : (r.bucket + 1) * width]
-            assert r.vmin == seg.min(), (name, r.doc_id, r.bucket)
-            assert r.vmax == seg.max()
-            assert r.vcount == seg.size
-            assert abs(r.vmean - seg.sum() / seg.size) < 1e-9
-            seen.setdefault(r.doc_id, set()).add(r.bucket)
-        for doc, v in raw.items():
-            assert seen[doc] == set(range((v.size + width - 1) // width))
+    """Every tier of the rollup kernel equals a per-doc numpy window
+    slice exactly, on the synthetic table plus an empty doc, a 37-token
+    doc and a doc spanning two days; the 1m tier of rollup_tokens_base
+    too."""
+    toks = tokens_df.select("doc_id", "tokens").unionByName(edge_docs(spark))
+    want = numpy_tiers((r.doc_id, r.tokens) for r in toks.collect())
+    arrays = tier_arrays(toks).persist()
+    for name in TIERS:
+        assert tier_rows(tier_table(arrays, name)) == want[name], name
+    assert [b for d, b in want["1d"] if d == "edge_long"] == [0, 1]
+    assert tier_rows(rollup_tokens_base(toks)) == want["1m"]
+    arrays.unpersist()
 
 
 def test_rollup_events_matches_sql(spark):
@@ -170,6 +174,19 @@ def test_unfused_kernels_reject_null_tokens(spark, op):
         [("a", [1, 2, 3, 4]), ("b", None), ("c", [7])], "doc_id string, tokens array<int>"
     )
     with pytest.raises(Exception, match="null tokens for doc_id 'b'"):
+        op(df.coalesce(1)).collect()
+
+
+@pytest.mark.parametrize(
+    "op", [fused_compress_rollup, tier_arrays], ids=["fused_compress_rollup", "tier_arrays"]
+)
+def test_arrow_kernels_reject_null_doc_id(spark, op):
+    """A null doc_id fails instead of keying tier rows by null; the shared
+    Arrow flatten checks it for both kernels."""
+    df = spark.createDataFrame(
+        [("a", [1, 2, 3, 4]), (None, [5, 6]), ("c", [7])], "doc_id string, tokens array<int>"
+    )
+    with pytest.raises(Exception, match="1 null doc_id in a batch of 3 rows"):
         op(df.coalesce(1)).collect()
 
 
